@@ -7,7 +7,8 @@
   rows. The DuckDB oracle is the identity SELECT, so the value-hash match
   proves bit-identical decode on real parquet data.
 * ``codec_pfor_outliers`` / ``codec_float_lossy`` — SQL-expressible codec
-  paths end-to-end (patched-FOR; lossy float within its error bound).
+  paths end-to-end (an outlier-heavy int column, bit-exact; lossy float
+  within its error bound).
 * ``random_access_point`` / ``random_access_prune`` — partial-decode
   surface: chunk-aligned point reads and zone-map pruning, both with
   exact SQL oracles by construction.
@@ -173,91 +174,19 @@ def _q_matrix_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_elias_heavytail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cost-gate promotion on second-order structure: a sorted stream
-    whose deltas are mostly 3 with a 100000 jump every 250 values.
-    History pinned by this gate: r3-r5 the winner was DELTA_GAMMA
-    (per-delta gamma lengths ~5 bits beat LEB128's ≥8 and BP128's block
-    max — measured then: gamma 6406 B vs delta 10078 / bp128 13333 per
-    10k values). r6 added the DOD codec (codecs/dod.py), whose
-    second differences collapse the near-constant deltas to a
-    mostly-zero nested stream — DoD sizes BELOW gamma on this exact
-    fixture (4.0 vs 4.25 bits/value: zigzag taxes always-positive
-    deltas ~1 bit; recentered DoD residuals don't pay it), and the
-    exact-size gate promoted it. The oracle pins BOTH the decoded
-    values (identity) AND the selected codec name, so the promotion is
-    itself value-gated — the sf0.1 sweep is what caught the stale
-    delta_gamma expectation. DELTA_GAMMA stays in the gate (kernel
-    round-trips in tests/test_elias.py; ELIAS_DELTA's octave regime in
-    `codec_elias_delta_octaves`). kinds excludes the constant grouping
+    """Cost-gate choice on a heavy-tailed delta stream: a sorted stream
+    whose deltas are mostly 3 with a 100000 jump every 250 values. The
+    winner is DELTA_GAMMA: per-delta gamma lengths (~5 bits) beat
+    LEB128's ≥8 and BP128's block max (measured: gamma 6406 B vs delta
+    10078 / bp128 13333 per 10k values). The oracle pins BOTH the
+    decoded values (identity) AND the selected codec name, so a change of
+    winner is itself value-gated. kinds excludes the constant grouping
     column so the top-level winner is visible."""
     from varint_spark.engine import EncodeOptions, decode_blocks
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", F.lit("all").alias("g"),
         (F.col("event_id") * 3 + F.floor(F.col("event_id") / 250) * 100000)
-        .cast("long").alias("v"))
-    opts = EncodeOptions(num_buckets=4, chunk_rows=16_384, salt_span=65_536,
-                         group_col="g", order_col="event_id")
-    kinds = {"event_id": "int64", "v": "int64"}
-    blocks = encode_transcripts(ev, opts, kinds=kinds).cache()
-    codec = blocks.filter(F.col("column") == "v").select("codec").distinct()
-    rows = decode_blocks(blocks, "event_id long, v long", kinds=kinds)
-    return rows.crossJoin(codec)
-
-
-def _q_elias_delta_octaves(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Elias DELTA code proper through the gate (reference
-    src/varintElias.c:171-226, array forms :207-226): magnitudes spread
-    across octaves with full-entropy mantissas. Bit lengths after zigzag
-    are {29, 36, 43, 50} — each just past a 7-bit LEB128 boundary, so the
-    varint floor pays a full padding byte; FOR pays the 50-bit max width
-    for every value; gamma pays 2L-1. The gamma-coded-length form costs
-    L + 2*log2(L) - 2 and wins (measured on this stream: ~45.2 vs LEB 48 /
-    FOR 49 bits per value). The oracle pins the decoded values (identity)
-    AND the selected codec — nomination comes from the wide-range branch
-    (selector.candidate_int_codecs), selection from the exact-cost gate."""
-    from varint_spark.engine import EncodeOptions, decode_blocks
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", F.lit("all").alias("g"),
-        F.expr(
-            "CAST(shiftleft(CAST(1 AS BIGINT),"
-            "  element_at(array(27,27,27,27,34,34,34,41,41,48),"
-            "             CAST(event_id % 10 + 1 AS INT)))"
-            " + pmod(event_id * 2654435761,"
-            "        shiftleft(CAST(1 AS BIGINT),"
-            "  element_at(array(27,27,27,27,34,34,34,41,41,48),"
-            "             CAST(event_id % 10 + 1 AS INT)))) AS BIGINT)"
-        ).alias("v"))
-    opts = EncodeOptions(num_buckets=4, chunk_rows=16_384, salt_span=65_536,
-                         group_col="g", order_col="event_id")
-    kinds = {"event_id": "int64", "v": "int64"}
-    blocks = encode_transcripts(ev, opts, kinds=kinds).cache()
-    codec = blocks.filter(F.col("column") == "v").select("codec").distinct()
-    rows = decode_blocks(blocks, "event_id long, v long", kinds=kinds)
-    return rows.crossJoin(codec)
-
-
-def _q_dod_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-of-delta through the gate (reference
-    examples/integration/delta_compression.c and
-    examples/reference/timeseries_db.c:240-320; 7.6-7.9x timestamp claim
-    README.md:188): a regular 1-second cadence stored as µs with ±0.5 s
-    ms-granular jitter — the second derivative is ms-scale while the
-    first is 10^6 µs, and every stream value is a multiple of 1000, so
-    DoD's GCD scaling + nested bitpack beat delta ~1.5x and BP128's
-    per-block max width. The oracle pins the decoded values (identity)
-    AND the selected codec name — deltas stay >= 0 (jitter difference is
-    bounded by the cadence) so the sorted-branch nomination fires and the
-    exact byte comparison picks 'dod'; a selector regression or a DoD
-    decode bug each hash-fail."""
-    from varint_spark.engine import EncodeOptions, decode_blocks
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", F.lit("all").alias("g"),
-        (F.lit(1_700_000_000_000_000)
-         + F.col("event_id") * 1_000_000
-         + (F.pmod(F.col("event_id") * 2654435761, F.lit(1001)) - 500) * 1000)
         .cast("long").alias("v"))
     opts = EncodeOptions(num_buckets=4, chunk_rows=16_384, salt_span=65_536,
                          group_col="g", order_col="event_id")
@@ -298,7 +227,7 @@ def _q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_random_access_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point lookups into encoded blocks WITHOUT full decode (reference
-    varintFORGetAt/varintPFORGetAt/varintRLEGetAt — SURVEY §2.A.5): encode
+    varintFORGetAt/varintRLEGetAt — SURVEY §2.A.5): encode
     events ordered by the contiguous event_id with aligned salting
     (salt_span a multiple of chunk_rows), then read positions {0, 10..14}
     of every chunk via get_at/get_range. The alignment makes the
@@ -355,7 +284,7 @@ def _q_predicate_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """random_access_prune's exact-filter stage pushed INTO the encoded
     form: zone-map chunk pruning first, then ``ts >= mid`` evaluated
     against the surviving chunks' ENCODED ts blocks — bit-sliced
-    packed-offset compares for FOR/PFOR, header-bound 128-block pruning
+    packed-offset compares for FOR, header-bound 128-block pruning
     for BP128 (codecs/random_access.filter_ge; reference partial-decode
     surface, varintFORDecodeBlock src/varintFOR.c:597,182-201). The
     surviving chunks are never fully decoded (monkeypatch-proved in
@@ -1308,7 +1237,7 @@ def _q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     sidecar design through the engine's OWN Roaring-style bitmap codec
     (varint_spark.deletes; ref src/varintBitmap.c containers): two
     deletes (string-eq on the dictionary-encoded event_type, an id range
-    on the FOR/PFOR-encoded event_id) are each evaluated on the ENCODED
+    on the FOR-encoded event_id) are each evaluated on the ENCODED
     form (zero shuffle, predicate column's blocks only), merged by
     container-level OR on the serialized vectors (canonical bytes — merge
     order invisible), and applied executor-side inside the decode UDF.
@@ -1717,7 +1646,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "set_ops_bitmap_analog": _q_set_ops,
         "bitmap_codec_algebra": _q_bitmap_codec,
         # --- new in r6 (insert here, inside the 50-row window) --------
-        "codec_dod_timestamps": _q_dod_timestamps,
         "bloom_prune": _q_bloom_prune,
         "text_search_phrase": _q_text_search_phrase,
         "text_search_near": _q_text_search_near,
@@ -1726,8 +1654,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "approx_distinct_hll": _q_approx_distinct,
         "groupby_pushdown": _q_groupby_pushdown,
         # re-derived expectations — these two need fresh driver rows:
-        # their r05 rows predate the dict format-version byte / the DoD
-        # codec's promotion on the heavytail fixture
+        # their r05 rows predate the dict format-version byte / the
+        # heavytail fixture's codec pin moved with the gate
         "encode_stats_transcripts": _q_encode_stats,
         "codec_elias_heavytail": _q_elias_heavytail,
         # --- r5-green re-pins filling out the window ------------------
@@ -1761,7 +1689,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "codec_pfor_outliers": _q_pfor,
         "codec_float_lossy": _q_float_lossy,
         "codec_embedding_lossy": _q_embedding_lossy,
-        "codec_elias_delta_octaves": _q_elias_delta_octaves,
         "random_access_point": _q_random_access_point,
         "random_access_prune": _q_random_access_prune,
         "predicate_pushdown_encoded": _q_predicate_pushdown,
@@ -1977,34 +1904,10 @@ def oracle_sql() -> dict[str, str]:
         # identity on the values AND the gate's codec choice: per-delta
         # gamma lengths beat every fixed-width/LEB128 candidate on this
         # deterministic heavy-tailed stream (derivation in the docstring)
-        # r6 re-derivation: the DoD codec now wins this fixture (see the
-        # query docstring) — the pinned expectation moved with the gate
         "codec_elias_heavytail": (
             "SELECT event_id,"
             " CAST(event_id * 3 + (event_id // 250) * 100000 AS BIGINT) AS v,"
-            " 'dod' AS codec FROM events"
-        ),
-        # identity on the values AND the gate's codec choice: gamma-coded
-        # lengths (Elias delta proper) win the octave-spread regime
-        # (derivation in the query docstring)
-        "codec_elias_delta_octaves": (
-            "WITH s AS (SELECT event_id,"
-            "  list_extract([27,27,27,27,34,34,34,41,41,48],"
-            "               CAST(event_id % 10 + 1 AS INT)) AS e FROM events)"
-            " SELECT event_id,"
-            " CAST((CAST(1 AS BIGINT) << e)"
-            "  + (event_id * 2654435761) % (CAST(1 AS BIGINT) << e) AS BIGINT) AS v,"
-            " 'elias_delta' AS codec FROM s"
-        ),
-        # identity on the values AND the gate's codec choice: second
-        # derivative is ms-scale on a 1-second cadence, so delta-of-delta
-        # (GCD-scaled nested bitpack) beats delta/BP128 (derivation in
-        # the query docstring). Positive operands: DuckDB % == Spark pmod.
-        "codec_dod_timestamps": (
-            "SELECT event_id,"
-            " CAST(1700000000000000 + event_id * 1000000"
-            "  + ((event_id * 2654435761) % 1001 - 500) * 1000 AS BIGINT)"
-            " AS v, 'dod' AS codec FROM events"
+            " 'delta_gamma' AS codec FROM events"
         ),
         # answer-invariance of bloom pruning: the pruned decode + exact
         # filter must return exactly the plain-WHERE rows (FPs only keep

@@ -14,7 +14,7 @@ import numpy as np
 
 sys.path.insert(0, str(Path(__file__).parent.parent))
 
-from varint_spark.codecs import delta, foref, leb128, pfor, rle, varint  # noqa: E402
+from varint_spark.codecs import delta, foref, varint  # noqa: E402
 
 N = 10_000_000
 
@@ -42,33 +42,10 @@ def main() -> None:
     mask = (np.uint64(1) << nbits.astype(np.uint64)) - np.uint64(1)
     weighted = (raw & mask).view(np.int64)
 
-    from varint_spark.codecs import elias
-
-    # heavy-tailed tiny values — elias gamma's winning regime
-    geo = (rng.geometric(0.5, N) - 1).astype(np.int64)
-    # octave-spread magnitudes — elias delta proper's winning regime
-    octaves = (2 ** rng.uniform(20, 55, N)).astype(np.int64)
-
-    class _elias_delta:
-        encode = staticmethod(elias.encode_delta_code)
-        decode = staticmethod(elias.decode_delta_code)
-
-    from varint_spark.codecs import dod
-
-    # regular cadence + ms jitter — delta-of-delta's winning regime
-    # (reference examples/reference/timeseries_db.c:240-320)
-    cadence = (np.int64(1.7e15) + np.arange(N, dtype=np.int64) * 1_000_000
-               + rng.integers(-500, 501, N) * 1000)
-    cadence = np.maximum.accumulate(cadence)  # keep sorted under jitter
-
     for name, codec, data in [
         ("delta_sorted_ts", delta, ts),
         ("for_tight_cluster", foref, cluster),
         ("varint_bitweighted", varint, weighted),
-        ("pfor_tight_cluster", pfor, cluster),
-        ("elias_gamma_geometric", elias, geo),
-        ("elias_delta_octaves", _elias_delta, octaves),
-        ("dod_cadence_jitter_ts", dod, cadence),
     ]:
         t_enc, buf = _best_of(lambda c=codec, d=data: c.encode(d))
         t_dec, out = _best_of(lambda c=codec, b=buf: c.decode(b, N))

@@ -1,6 +1,6 @@
-"""Elias gamma codec tests — mirrors the reference's boundary suites
-(reference src/varintElias.c:465-486,647-677: powers of two and ±1
-neighbors incl. 127/128/129 and 65535/65536/65537)."""
+"""Elias gamma stream and DELTA_GAMMA codec tests — mirrors the
+reference's boundary suites (reference src/varintElias.c:465-486,647-677:
+powers of two and ±1 neighbors incl. 127/128/129 and 65535/65536/65537)."""
 
 from __future__ import annotations
 
@@ -13,11 +13,11 @@ I64_MIN = np.iinfo(np.int64).min
 
 
 def _rt(v):
-    v = np.asarray(v, dtype=np.int64)
-    e = elias.encode(v)
-    assert len(e) == elias.encoded_size(v)
-    out = elias.decode(e, len(v))
-    np.testing.assert_array_equal(out, v)
+    """Gamma stream round trip over zigzag(v)+1, with its exact size."""
+    m = elias._zigzag(np.asarray(v, dtype=np.int64)) + np.uint64(1)
+    e = elias.encode_stream(m)
+    assert len(e) == (elias._stream_size(m) if len(m) else 0)
+    np.testing.assert_array_equal(elias.decode_stream(e, len(m)), m)
     return e
 
 
@@ -44,11 +44,11 @@ def test_gamma_sizes_are_bit_exact():
     # gamma(m) is 2*bitlen(m)-1 bits; planar layout = [leb unary_bytes]
     # [unary plane: sum(L) bits] [per-length bitpack tails: sum(L-1) bits]
     # zigzag: v=0 -> m=1 (L=1); v=-1 -> m=2 (L=2)
-    assert elias.encoded_size(np.zeros(8, dtype=np.int64)) == 1 + 1  # leb + 8×1b unary
-    assert elias.encoded_size(np.array([-1] * 8, dtype=np.int64)) == 1 + 2 + 1
-    assert elias.encoded_size(np.array([], dtype=np.int64)) == 0
+    assert len(_rt(np.zeros(8))) == 1 + 1  # leb + 8×1b unary
+    assert len(_rt([-1] * 8)) == 1 + 2 + 1
+    assert len(_rt([])) == 0
     # ~1 bit/value asymptotically for all-zero data
-    assert elias.encoded_size(np.zeros(65536, dtype=np.int64)) == 2 + 8192  # 2-byte leb
+    assert len(_rt(np.zeros(65536))) == 2 + 8192  # 2-byte leb
 
 
 def test_heavy_tailed_beats_fixed_width_and_roundtrips():
@@ -68,12 +68,11 @@ def test_empty_single_and_tiny():
 
 
 def test_int64_min_rejected_and_excluded():
-    bad = np.array([I64_MIN], dtype=np.int64)
-    with pytest.raises(ValueError):
-        elias.encode(bad)
-    assert elias.encoded_size(bad) >= 1 << 62
-    # a wrapped delta that lands exactly on INT64_MIN is likewise excluded
+    # a wrapped delta that lands exactly on INT64_MIN (zigzag+1 wraps) is
+    # rejected loudly, and its sentinel size keeps the gate away from it
     dv = np.array([2 ** 62, 2 ** 62 - 2 ** 63], dtype=np.int64)
+    with pytest.raises(ValueError):
+        elias.encode_delta(dv)
     assert elias.encoded_size_delta(dv) >= 1 << 62
 
 
@@ -83,28 +82,6 @@ def test_delta_wrap_domain_invertible():
     v = rng.integers(-(2 ** 62), 2 ** 62, 1000).astype(np.int64) * 2
     if elias.encoded_size_delta(v) < 1 << 62:
         _rt_delta(v)
-
-
-def test_selector_picks_gamma_on_heavy_tail():
-    """The cost gate must route a heavy-tailed chunk to a gamma form and
-    roundtrip it through the generic block entry points."""
-    from varint_spark.selector import decode_int_block, encode_int_block
-
-    rng = np.random.default_rng(21)
-    # mostly tiny, 2% huge: outlier_ratio trips, gamma beats PFOR's
-    # fixed-width body + exceptions
-    v = np.where(rng.random(65536) < 0.98,
-                 rng.geometric(0.5, 65536) - 1,
-                 rng.integers(1 << 30, 1 << 40, 65536)).astype(np.int64)
-    blk = encode_int_block(v)
-    cid = blocks.unpack_block(blk)[0]
-    np.testing.assert_array_equal(decode_int_block(blk), v)
-    # gate picks by exact cost; ELIAS_DELTA joined the rotation in r4 and
-    # wins here outright (the 2% huge values cost L + 2·log2(L) bits
-    # instead of gamma's 2L)
-    assert cid in (blocks.ELIAS_GAMMA, blocks.ELIAS_DELTA, blocks.PFOR)
-    # and the gamma candidate's exact size must be what the gate compared
-    assert elias.encoded_size(v) == len(elias.encode(v))
 
 
 def test_selector_delta_gamma_on_heavy_tailed_sorted():
@@ -120,65 +97,7 @@ def test_selector_delta_gamma_on_heavy_tailed_sorted():
     blk = encode_int_block(v)
     cid = blocks.unpack_block(blk)[0]
     np.testing.assert_array_equal(decode_int_block(blk), v)
-    # delta-of-delta (nested elias) edges delta_gamma by a few % here; the
-    # pin is that NO fixed-width/LEB128 candidate wins, and whatever does
-    # is at least as small as the per-delta-gamma bitstream
-    assert cid in (blocks.DELTA_GAMMA, blocks.DOD)
-    from varint_spark.codecs import elias as _elias
-    assert len(blk) <= _elias.encoded_size_delta(v) + 16
-
-
-# ---- Elias DELTA code proper (gamma-coded length prefix) --------------------
-
-
-def test_elias_delta_code_roundtrip_boundaries():
-    ks = np.arange(1, 63)
-    v = np.concatenate([[0, 1, -1], 2**ks - 1, 2**ks, -(2**ks) + 1, -(2**ks),
-                        [2**62, -(2**62), (1 << 62) + 12345]]).astype(np.int64)
-    buf = elias.encode_delta_code(v)
-    assert len(buf) == elias.encoded_size_delta_code(v)
-    np.testing.assert_array_equal(elias.decode_delta_code(buf, len(v)), v)
-
-
-def test_elias_delta_code_rejects_int64_min():
-    import pytest
-
-    with pytest.raises(ValueError):
-        elias.encode_delta_code(np.array([-(1 << 63)], dtype=np.int64))
-    assert elias.encoded_size_delta_code(
-        np.array([-(1 << 63)], dtype=np.int64)) == 1 << 62
-
-
-def test_elias_delta_code_beats_gamma_and_for_on_octave_spread():
-    """The delta code's regime: magnitudes spread across many octaves —
-    gamma pays 2L-1 per value, FOR pays the max width, the gamma-coded
-    length reaches L + 2*log2(L) - 2."""
-    from varint_spark.codecs import foref
-
-    rng = np.random.default_rng(5)
-    v = (2 ** rng.uniform(20, 55, 50_000)).astype(np.int64)
-    d = elias.encoded_size_delta_code(v)
-    assert d < elias.encoded_size(v) * 0.8
-    assert d < foref.encoded_size(v)
-
-
-def test_selector_picks_elias_delta_on_octave_stream():
-    """The deterministic stream behind the codec_elias_delta_octaves
-    driver query: the decision tree nominates ELIAS_DELTA on wide-range
-    chunks and the exact-cost gate selects it, at every chunk size the
-    driver produces."""
-    from varint_spark.selector import (codec_name_of, decode_int_block,
-                                       encode_int_block)
-
-    pat = np.array([27, 27, 27, 27, 34, 34, 34, 41, 41, 48], dtype=np.int64)
-
-    def stream(ids):
-        e = pat[ids % 10]
-        return (np.int64(1) << e) + (ids * 2654435761) % (np.int64(1) << e)
-
-    for ids in [np.arange(1000), np.arange(10_000),
-                np.arange(65_536, 81_920)]:
-        v = stream(ids.astype(np.int64))
-        blk = encode_int_block(v)
-        assert codec_name_of(blk) == "elias_delta"
-        np.testing.assert_array_equal(decode_int_block(blk), v)
+    # NO fixed-width/LEB128 candidate wins, and the block is the
+    # per-delta-gamma bitstream plus its header
+    assert cid == blocks.DELTA_GAMMA
+    assert len(blk) <= elias.encoded_size_delta(v) + 16

@@ -51,18 +51,6 @@ def test_segdelta_any_segments(seglists):
 
 
 @settings(max_examples=150, deadline=None)
-@given(st.lists(st.integers(min_value=-(2**63) + 1, max_value=2**63 - 1),
-                max_size=300))
-def test_elias_delta_code_any_int64(xs):
-    from varint_spark.codecs import elias
-
-    v = np.array(xs, dtype=np.int64)
-    buf = elias.encode_delta_code(v)
-    assert len(buf) == elias.encoded_size_delta_code(v) or len(v) == 0
-    np.testing.assert_array_equal(elias.decode_delta_code(buf, len(v)), v)
-
-
-@settings(max_examples=150, deadline=None)
 @given(st.lists(I64, max_size=300), I64)
 def test_filter_ge_le_between_any_block(xs, c):
     from varint_spark.codecs import random_access as ra

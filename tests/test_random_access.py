@@ -1,5 +1,5 @@
 """Random access / partial decode parity (ref varintFORGetAt,
-varintPFORGetAt, varintRLEGetAt, varintDictFind — SURVEY §2.A.5)."""
+varintRLEGetAt, varintDictFind — SURVEY §2.A.5)."""
 
 from __future__ import annotations
 
@@ -43,46 +43,24 @@ def test_get_at_bounds():
         random_access.get_at(blk, -1)
 
 
-def _pfor_block():
-    from varint_spark.codecs import pfor
-    rng = np.random.default_rng(7)
-    v = rng.integers(1000, 2000, 20_000).astype(np.int64)
-    v[rng.integers(0, len(v), 150)] = rng.integers(2**40, 2**50, 150)  # outliers
-    blk = blocks.pack_block(blocks.PFOR, len(v), pfor.encode(v))
-    assert codec_name_of(blk) == "pfor"
-    return v, blk
+@pytest.mark.parametrize("cid", [4, 7, 12, 14, 15, 30])
+def test_retired_or_unassigned_codec_id_raises(cid):
+    """Ids 4/7/12/14/15 (PFOR, F64_XOR, ELIAS_GAMMA, ELIAS_DELTA, DOD) are
+    retired and 30 was never assigned: a block carrying one, here over a
+    valid FOR payload, must fail loudly at every entry point instead of
+    decoding to values."""
+    from varint_spark.codecs import foref
+    from varint_spark.selector import decode_column
 
-
-def test_pfor_get_range_matches_full_decode():
-    v, blk = _pfor_block()
-    full = decode_int_block(blk)
-    np.testing.assert_array_equal(full, v)
-    rng = np.random.default_rng(3)
-    spans = [(0, 64), (len(v) - 64, 64), (0, len(v)), (5000, 0)]
-    spans += [(int(s), int(n)) for s, n in
-              zip(rng.integers(0, len(v) - 512, 20), rng.integers(1, 512, 20))]
-    for start, n in spans:
-        np.testing.assert_array_equal(
-            random_access.get_range(blk, start, n), v[start:start + n], (start, n))
-
-
-def test_pfor_get_at_never_full_decodes(monkeypatch):
-    """The O(1) path must not touch pfor.decode or the full body unpack
-    (ref varintPFORGetAt src/varintPFOR.c:261)."""
-    from varint_spark.codecs import bitpack as bp, pfor
-    v, blk = _pfor_block()
-    monkeypatch.setattr(pfor, "decode",
-                        lambda *a, **k: (_ for _ in ()).throw(AssertionError("full decode")))
-    n_total = len(v)
-    real_unpack = bp.unpack
-    def guarded(buf, width, count):
-        assert count < n_total, "full-body unpack in get_at"
-        return real_unpack(buf, width, count)
-    monkeypatch.setattr(bp, "unpack", guarded)
-    rng = np.random.default_rng(5)
-    full = np.array(v)
-    for idx in rng.integers(0, len(v), 50):
-        assert random_access.get_at(blk, int(idx)) == int(full[idx])
+    v = np.arange(100, dtype=np.int64)
+    blk = bytes([cid]) + blocks.put_uvarint(len(v)) + foref.encode(v)
+    calls = [lambda: decode_column(blk), lambda: decode_int_block(blk),
+             lambda: random_access.get_at(blk, 0),
+             lambda: random_access.get_range(blk, 0, 10),
+             lambda: random_access.filter_ge(blk, 50)]
+    for call in calls:
+        with pytest.raises(ValueError, match=f"unknown or retired codec id {cid}"):
+            call()
 
 
 def test_rle_and_dict_get_range():
@@ -115,7 +93,7 @@ def test_filter_ge_parity_all_codecs():
         rng.integers(1000, 5000, 4000, dtype=np.int64),             # FOR
         np.where(rng.random(4000) < 0.01,
                  rng.integers(0, 1 << 40, 4000, dtype=np.int64),
-                 rng.integers(1000, 2000, 4000, dtype=np.int64)),   # PFOR
+                 rng.integers(1000, 2000, 4000, dtype=np.int64)),   # outliers
         np.int64(1e12) + np.cumsum(rng.integers(-50, 60, 4000,
                                                 dtype=np.int64)),   # BP128
         np.repeat(rng.integers(-5, 5, 100, dtype=np.int64), 40),    # RLE
@@ -144,14 +122,14 @@ def test_filter_ge_nullable_rows_are_false():
 
 
 def test_filter_ge_never_fully_decodes(monkeypatch):
-    """The VERDICT r3 #4 guarantee: for FOR/PFOR/BP128/RLE/DICT the
+    """The VERDICT r3 #4 guarantee: for FOR/BP128/RLE/DICT the
     predicate and the masked gather run on the encoded form — the full
     block decoder is never invoked. The DELTA fallback (inherently
     sequential) proves the monkeypatch actually bites."""
     import pytest
 
     from varint_spark import selector
-    from varint_spark.codecs import blocks as B, bp128, delta, foref, pfor
+    from varint_spark.codecs import blocks as B, bp128, delta, foref
     from varint_spark.codecs import random_access as ra
 
     def boom(*a, **k):
@@ -161,7 +139,7 @@ def test_filter_ge_never_fully_decodes(monkeypatch):
 
     rng = np.random.default_rng(11)
     sorted_vals = np.sort(rng.integers(0, 10**7, 4096, dtype=np.int64))
-    for mod, cid in [(foref, B.FOR), (pfor, B.PFOR), (bp128, B.BP128_DELTA)]:
+    for mod, cid in [(foref, B.FOR), (bp128, B.BP128_DELTA)]:
         blk = _forced_block(mod, cid, sorted_vals)
         c = int(np.median(sorted_vals))
         mask = ra.filter_ge(blk, c)

@@ -7,4 +7,4 @@ reference's SIMD kernels (reference src/varintFOR.c:245-596,
 src/varintBP128.c:8-60).
 """
 
-from . import bitmap, bitpack, blocks, delta, dict_codec, elias, external, f64lossy, f64xor, foref, fsst, leb128, matrix, pfor, plain, random_access, rle, segdelta, strings, tagged, varint, zigzag  # noqa: F401
+from . import bitmap, bitpack, blocks, delta, dict_codec, elias, external, f64lossy, foref, fsst, leb128, matrix, plain, random_access, rle, segdelta, strings, tagged, varint, zigzag  # noqa: F401

@@ -10,7 +10,11 @@ Layout (all integers LEB128 unless noted)::
     sub_block := [byte_length: leb128][bytes]      # nested blocks inside payloads
 
 Codec ids (int codecs operate on int64 logical values; string codecs on
-arrays of utf-8 strings):
+arrays of utf-8 strings) are listed below. Ids 4 (PFOR), 7 (F64_XOR),
+12 (ELIAS_GAMMA), 14 (ELIAS_DELTA) and 15 (DOD) are retired, never reuse:
+on no input did one of them save 0.5% of the bytes
+(``scripts/codec_census.py``). A block carrying a retired or unassigned id
+fails to unpack with ``ValueError``; it never decodes to values.
 """
 
 from __future__ import annotations
@@ -25,27 +29,18 @@ PLAIN_INT = 0   # fixed 8-byte little-endian int64
 LEB128_ZZ = 1   # per-value zigzag+LEB128 varint stream (the reference-faithful path)
 DELTA = 2       # first value + zigzag+LEB128 deltas   (ref src/varintDelta.c)
 FOR = 3         # frame-of-reference min + bit-packed offsets (ref src/varintFOR.c)
-PFOR = 4        # FOR + exception list                  (ref src/varintPFOR.c)
 RLE_INT = 5     # run lengths + run values              (ref src/varintRLE.c)
 DICT_INT = 6    # sorted unique values + packed indices (ref src/varintDict.c)
-F64_XOR = 7     # Gorilla-style XOR-prev over float64 bits (ref src/varintFloat.c)
 SEG_DELTA = 8   # per-segment delta (prevValue threading, ref src/varintBP128.c:347-427)
 F64_LOSSY = 9   # lossy sign/exp/mantissa split, precision modes (ref src/varintFloat.h:27-114)
 BP128_DELTA = 10  # 128-value blocks, per-block width + first (ref src/varintBP128.c:167-214)
 MATRIX_F32 = 11   # fixed-dim f32 matrix (embeddings): column-major f64lossy planes
 #                   (ref src/varintDimension.h:30-56 pair header + src/varintFloat.h:27-114)
-ELIAS_GAMMA = 12  # gamma bitstream over zigzag+1 (ref src/varintElias.c:88-226)
 DELTA_GAMMA = 13  # first + gamma-coded zigzag deltas (gamma where it pays: tiny heavy-tailed deltas)
-ELIAS_DELTA = 14  # Elias delta code proper: gamma-coded bit length + mantissa tail
-#                   (ref src/varintElias.c:171-226; wins when magnitudes span many octaves)
-DOD = 15        # delta-of-delta: [v0, d1, second diffs] / GCD, nested adaptive
-#                 stream (ref examples/integration/delta_compression.c,
-#                 examples/reference/timeseries_db.c:240-320 — Gorilla-style
-#                 timestamp codec; wins on regular-cadence streams)
 # string codecs
-PLAIN_STR = 16  # lengths int-block + concatenated utf-8 bytes
+PLAIN_STR = 16  # LEB128 lengths + concatenated utf-8 bytes
 DICT_STR = 17   # codes int-block + dictionary PLAIN_STR block
-FSST_STR = 18   # lengths int-block + symbol-table-compressed corpus
+FSST_STR = 18   # LEB128 lengths + symbol-table-compressed corpus
 DICT_STR_SHARED = 19  # codes int-block against a broadcast dictionary
 FSST_STR_SHARED = 20  # lengths + corpus compressed with broadcast FSST tables
 # wrapper
@@ -56,18 +51,13 @@ CODEC_NAMES = {
     LEB128_ZZ: "leb128_zz",
     DELTA: "delta",
     FOR: "for",
-    PFOR: "pfor",
     RLE_INT: "rle_int",
     DICT_INT: "dict_int",
-    F64_XOR: "f64_xor",
     SEG_DELTA: "seg_delta",
     F64_LOSSY: "f64_lossy",
     BP128_DELTA: "bp128_delta",
     MATRIX_F32: "matrix_f32",
-    ELIAS_GAMMA: "elias_gamma",
     DELTA_GAMMA: "delta_gamma",
-    ELIAS_DELTA: "elias_delta",
-    DOD: "dod",
     PLAIN_STR: "plain_str",
     DICT_STR: "dict_str",
     FSST_STR: "fsst_str",
@@ -77,9 +67,8 @@ CODEC_NAMES = {
 }
 CODEC_IDS = {v: k for k, v in CODEC_NAMES.items()}
 
-INT_CODECS = (PLAIN_INT, LEB128_ZZ, DELTA, FOR, PFOR, RLE_INT, DICT_INT, F64_XOR,
-              SEG_DELTA, F64_LOSSY, BP128_DELTA, ELIAS_GAMMA, DELTA_GAMMA, ELIAS_DELTA,
-              DOD)
+INT_CODECS = (PLAIN_INT, LEB128_ZZ, DELTA, FOR, RLE_INT, DICT_INT, SEG_DELTA,
+              F64_LOSSY, BP128_DELTA, DELTA_GAMMA)
 STR_CODECS = (PLAIN_STR, DICT_STR, FSST_STR, DICT_STR_SHARED, FSST_STR_SHARED)
 
 
@@ -114,6 +103,8 @@ def unpack_block(buf: bytes | memoryview) -> tuple[int, int, memoryview]:
     """block bytes -> (codec_id, count, payload view)."""
     mv = memoryview(buf)
     codec_id = mv[0]
+    if codec_id not in CODEC_NAMES:
+        raise ValueError(f"unknown or retired codec id {codec_id}")
     count, pos = take_uvarint(mv, 1)
     return codec_id, count, mv[pos:]
 

@@ -1,17 +1,16 @@
-"""Elias gamma codec — universal bit-level code for heavy-tailed
-tiny-value streams.
+"""Elias gamma stream and the DELTA_GAMMA codec built on it — a
+universal bit-level code for heavy-tailed tiny-value streams.
 
 Parity with the reference's Elias coder (reference src/varintElias.c:88-226
-gamma/delta bit emission over a uint64 bitstream writer): a value ``m ≥ 1``
+gamma bit emission over a uint64 bitstream writer): a value ``m ≥ 1``
 with bit length L is coded in 2L-1 bits — L-1 zeros announcing the length,
-then the L bits of ``m`` (MSB first). Signed int64 maps through zigzag+1.
+then the L bits of ``m`` (MSB first).
 
-Why it earned a codec id (measured, not assumed): on geometric(p=.5) data
-gamma is 1.9× smaller than FOR (fixed width pays the tail's max), and on
-zipf(1.5) it beats PFOR by ~12% — fixed-width and exception codes both
-lose to a per-value-length code when the distribution is heavy-tailed
-with a tiny typical magnitude. The cost gate keeps it honest everywhere
-else (uniform data: gamma ≈ 2× worse than FOR — never selected).
+Where it pays in this engine: successive deltas of timestamp/turn-index
+and sorted-key columns are mostly tiny with a heavy tail, where fixed
+widths pay the tail's max and the plain DELTA codec's LEB128 floor is 8
+bits/value, while gamma reaches 1. The cost gate keeps it honest
+everywhere else.
 
 Layout deviation (deliberate, documented): the reference interleaves each
 code's unary prefix with its mantissa in one bitstream, which forces a
@@ -29,22 +28,15 @@ padding, ≤63 B/block worst case), but all bit I/O goes through the
 optimized fixed-width ``bitpack`` kernels: decode is one ``unpackbits``
 for the lengths (gaps between unary ones) + one ``bitpack.unpack`` per
 DISTINCT length — the decoder recovers each group's membership from the
-unary plane alone. The reference's semantic (self-delimiting universal
-code, `varintEliasGammaIsBeneficial` gating) is preserved at block
-granularity; its BitWriter survives as bitpack, exactly as SURVEY §2
-planned.
+unary plane alone. Its BitWriter survives as bitpack, exactly as SURVEY
+§2 planned.
 
-Two block forms:
+``DELTA_GAMMA`` block payload: [first: 8 B LE] + planar gamma over
+zigzag(delta)+1 of the successive deltas.
 
-* ``ELIAS_GAMMA`` — planar gamma over zigzag(v)+1 (raw values).
-* ``DELTA_GAMMA`` — [first: 8 B LE] + planar gamma over the zigzag'd
-  successive deltas: where gamma actually pays in this engine
-  (timestamp/turn-index deltas are mostly tiny with a heavy tail; the
-  plain DELTA codec's LEB128 floor is 8 bits/value, gamma reaches 1).
-
-int64 min (zigzag 2^64-1 → m overflow) is rejected loudly; the selector's
-candidate gate excludes such chunks analytically (exact sizers return a
-sentinel 2^62 so the cost gate never picks them).
+A wrapped delta of INT64_MIN (zigzag 2^64-1 → m overflow) is rejected
+loudly; the exact sizer returns a sentinel 2^62 so the cost gate never
+picks such a chunk.
 """
 
 from __future__ import annotations
@@ -54,7 +46,6 @@ import numpy as np
 from . import bitpack, blocks
 
 _U64 = np.uint64
-_POW2 = np.uint64(1) << np.arange(64, dtype=np.uint64)  # 1, 2, 4, ... 2^63
 
 
 def _zigzag(v: np.ndarray) -> np.ndarray:
@@ -103,7 +94,7 @@ def _length_groups(L: np.ndarray):
 
 def _pack_tails(m: np.ndarray, L: np.ndarray, parts: list) -> None:
     """Append the mantissa-tail planes (grouped by bit length, ascending)
-    to ``parts`` — shared by the gamma and delta-code encoders."""
+    to ``parts``."""
     order, groups = _length_groups(L)
     ms = m[order]
     for Lv, sl in groups:
@@ -114,7 +105,7 @@ def _pack_tails(m: np.ndarray, L: np.ndarray, parts: list) -> None:
 
 
 def _unpack_tails(mv: memoryview, pos: int, L: np.ndarray, count: int
-                  ) -> tuple[np.ndarray, int]:
+                  ) -> np.ndarray:
     """Inverse of _pack_tails: rebuild the values from the grouped tail
     planes with ONE stable argsort + inverse scatter (no per-length
     full-array masking)."""
@@ -132,7 +123,7 @@ def _unpack_tails(mv: memoryview, pos: int, L: np.ndarray, count: int
         pos += nb
         ms[sl] = (_U64(1) << _U64(Lv - 1)) | tails.view(np.uint64)
     m[order] = ms
-    return m, pos
+    return m
 
 
 def encode_stream(m: np.ndarray) -> bytes:
@@ -157,27 +148,17 @@ def encode_stream(m: np.ndarray) -> bytes:
     return b"".join(parts)
 
 
-def _decode_stream_consumed(buf: bytes | memoryview, count: int
-                            ) -> tuple[np.ndarray, int]:
-    """planar gamma bitstream -> (uint64 values, bytes consumed) — the
-    consumed length is fully determined by the unary plane, which lets a
-    composite layout (ELIAS_DELTA's length stream) nest one stream after
-    another without an explicit byte-length prefix."""
+def decode_stream(buf: bytes | memoryview, count: int) -> np.ndarray:
+    """planar gamma bitstream -> uint64 values (fully vectorized: one
+    unpackbits for the lengths, one bitpack.unpack per distinct length)."""
     if count == 0:
-        return np.empty(0, dtype=np.uint64), 0
+        return np.empty(0, dtype=np.uint64)
     mv = memoryview(buf)
     u_nbytes, pos = blocks.take_uvarint(mv, 0)
     u_bits = np.unpackbits(np.frombuffer(mv[pos:pos + u_nbytes], dtype=np.uint8))
     ones = np.flatnonzero(u_bits)[:count]
     L = np.diff(ones, prepend=-1)  # gap between unary terminators = bitlen
-    pos += u_nbytes
-    return _unpack_tails(mv, pos, L, count)
-
-
-def decode_stream(buf: bytes | memoryview, count: int) -> np.ndarray:
-    """planar gamma bitstream -> uint64 values (fully vectorized: one
-    unpackbits for the lengths, one bitpack.unpack per distinct length)."""
-    return _decode_stream_consumed(buf, count)[0]
+    return _unpack_tails(mv, pos + u_nbytes, L, count)
 
 
 _OVERFLOW = np.uint64(0xFFFFFFFFFFFFFFFF)  # zigzag(INT64_MIN): m would wrap
@@ -195,102 +176,6 @@ def _stream_size(m: np.ndarray) -> int:
         if c:
             total += bitpack.packed_size(c, Lv - 1)
     return total
-
-
-def encode(v: np.ndarray) -> bytes:
-    """int64 values -> planar gamma payload (raw form)."""
-    zz = _zigzag(np.ascontiguousarray(v, dtype=np.int64))
-    if len(zz) and zz.max() == _OVERFLOW:
-        raise ValueError("elias gamma cannot code INT64_MIN (zigzag+1 wraps)")
-    return encode_stream(zz + _U64(1))
-
-
-def decode(buf: bytes | memoryview, count: int) -> np.ndarray:
-    return _unzigzag(decode_stream(buf, count) - _U64(1))
-
-
-def encoded_size(v: np.ndarray, zz: np.ndarray | None = None) -> int:
-    """Exact bytes of encode(v); sentinel 2^62 when uncodable (INT64_MIN).
-    ``zz``: optional precomputed zigzag(v) (selector shares one pass)."""
-    if zz is None:
-        zz = _zigzag(np.ascontiguousarray(v, dtype=np.int64))
-    if len(zz) == 0:
-        return 0
-    if zz.max() == _OVERFLOW:
-        return 1 << 62
-    return _stream_size(zz + _U64(1))
-
-
-# ---- Elias DELTA code proper (gamma-coded length prefix) --------------------
-#
-# The reference's second universal code (src/varintElias.c:171-226, array
-# forms :207-226): value m >= 1 with bit length L is coded as gamma(L)
-# followed by the L-1 mantissa bits of m below its leading 1 — total
-# 2*bitlen(L) - 1 + (L - 1) bits, which beats gamma's 2L - 1 as soon as
-# values get big (L >~ 4). Its winning regime is "uniform in log scale":
-# magnitudes spread across many octaves, where FOR pays the max width for
-# every value and gamma pays 2 bits per magnitude bit. Same planar
-# re-layout as gamma: the L values are themselves a planar gamma stream
-# (encode_stream reused verbatim — lengths are tiny, their gamma codes
-# short), then the m tails grouped by L through the fixed-width bitpack
-# kernels. Bit count identical to the reference's interleaved form modulo
-# per-group byte padding.
-
-
-def encode_stream_delta_code(m: np.ndarray) -> bytes:
-    """uint64 values (all ≥ 1) -> planar Elias delta bitstream:
-    [planar gamma of the bit lengths][m tails grouped by length]."""
-    n = len(m)
-    if n == 0:
-        return b""
-    L = _bitlen(m)
-    parts = [encode_stream(L.astype(np.uint64))]
-    _pack_tails(m, L, parts)
-    return b"".join(parts)
-
-
-def decode_stream_delta_code(buf: bytes | memoryview, count: int) -> np.ndarray:
-    if count == 0:
-        return np.empty(0, dtype=np.uint64)
-    mv = memoryview(buf)
-    Lu, pos = _decode_stream_consumed(mv, count)
-    return _unpack_tails(mv, pos, Lu.astype(np.int64), count)[0]
-
-
-def _stream_size_delta_code(m: np.ndarray) -> int:
-    """Exact bytes of encode_stream_delta_code(m)."""
-    L = _bitlen(m)
-    total = _stream_size(L.astype(np.uint64))
-    counts = np.bincount(L, minlength=66)
-    for Lv in range(2, 65):
-        c = int(counts[Lv])
-        if c:
-            total += bitpack.packed_size(c, Lv - 1)
-    return total
-
-
-def encode_delta_code(v: np.ndarray) -> bytes:
-    """int64 values -> planar Elias DELTA payload (zigzag+1, raw values)."""
-    zz = _zigzag(np.ascontiguousarray(v, dtype=np.int64))
-    if len(zz) and zz.max() == _OVERFLOW:
-        raise ValueError("elias delta cannot code INT64_MIN (zigzag+1 wraps)")
-    return encode_stream_delta_code(zz + _U64(1))
-
-
-def decode_delta_code(buf: bytes | memoryview, count: int) -> np.ndarray:
-    return _unzigzag(decode_stream_delta_code(buf, count) - _U64(1))
-
-
-def encoded_size_delta_code(v: np.ndarray, zz: np.ndarray | None = None) -> int:
-    """Exact bytes of encode_delta_code(v); 2^62 sentinel when uncodable.
-    ``zz``: optional precomputed zigzag(v)."""
-    if zz is None:
-        zz = _zigzag(np.ascontiguousarray(v, dtype=np.int64))
-    if len(zz) == 0:
-        return 0
-    if zz.max() == _OVERFLOW:
-        return 1 << 62
-    return _stream_size_delta_code(zz + _U64(1))
 
 
 def _wrap_deltas(v: np.ndarray) -> np.ndarray:

@@ -146,7 +146,7 @@ def decode(buf: bytes | memoryview, count: int) -> np.ndarray:
 
 # sub-block codecs with no O(1) point access: decoded once per lookup batch
 _SEQUENTIAL_SUBS = (blocks.DELTA, blocks.SEG_DELTA, blocks.LEB128_ZZ,
-                    blocks.ELIAS_GAMMA, blocks.DELTA_GAMMA, blocks.ELIAS_DELTA)
+                    blocks.DELTA_GAMMA)
 
 
 def get_positions(buf: bytes | memoryview, count: int,

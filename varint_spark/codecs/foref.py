@@ -49,7 +49,7 @@ def decode(buf: memoryview | bytes, count: int) -> np.ndarray:
 
 def encoded_size(values: np.ndarray, mn_offs=None) -> int:
     """``mn_offs``: optional precomputed ``(min, offsets)`` from
-    :func:`_offsets` — the selector shares one pass across FOR and PFOR."""
+    :func:`_offsets` — the selector reuses the min it already computed."""
     v = np.ascontiguousarray(values, dtype=np.int64)
     if len(v) == 0:
         return 0

@@ -37,15 +37,22 @@ def _pair_codes(corpus: np.ndarray) -> np.ndarray:
     return out
 
 
-_IDX32 = np.arange(1 << 16, dtype=np.int32)  # grown on demand by _idx32
+def _readonly_arange(n: int) -> np.ndarray:
+    out = np.arange(n, dtype=np.int32)
+    out.setflags(write=False)
+    return out
+
+
+_IDX32 = _readonly_arange(1 << 16)  # grown on demand by _idx32
 
 
 def _idx32(n: int) -> np.ndarray:
     """Cached read-only arange — the match kernel needs one per call and
-    the allocation shows up at profile scale."""
+    the allocation shows up at profile scale. Read-only because every
+    caller shares it: an in-place write would corrupt later encodes."""
     global _IDX32
     if len(_IDX32) < n:
-        _IDX32 = np.arange(n, dtype=np.int32)
+        _IDX32 = _readonly_arange(n)
     return _IDX32[:n]
 
 

@@ -4,8 +4,6 @@ Parity with the reference's partial-decode surface (SURVEY §2.A.5):
 
 * FOR — O(1) per value, fixed bit stride (``varintFORGetAt``,
   reference src/varintFOR.c:182-201)
-* PFOR — O(1) body + O(log n_exc) exception lookup (``varintPFORGetAt``,
-  src/varintPFOR.c:261)
 * RLE — O(runs) cumulative-length search (``varintRLEGetAt``,
   src/varintRLE.c:226)
 * DICT — O(1) index + dictionary entry
@@ -21,8 +19,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import bitpack, blocks, delta, leb128, zigzag
-from .blocks import (BP128_DELTA, DELTA, DELTA_GAMMA, DICT_INT, DOD,
-                     ELIAS_DELTA, ELIAS_GAMMA, FOR, LEB128_ZZ, PFOR,
+from .blocks import (BP128_DELTA, DELTA, DELTA_GAMMA, DICT_INT, FOR, LEB128_ZZ,
                      PLAIN_INT, RLE_INT, SEG_DELTA)
 
 
@@ -48,51 +45,6 @@ def for_get_range(payload: memoryview | bytes, count: int, start: int, n: int) -
     width = mv[pos]
     body = np.frombuffer(mv[pos + 1 :], dtype=np.uint8)
     offs = _unpack_range(body, width, start, n)
-    return (offs + np.int64(mn).astype(np.uint64)).view(np.int64)
-
-
-def _pfor_parts(payload: memoryview | bytes):
-    """Parse a PFOR payload header WITHOUT unpacking the body: returns
-    (min, width, payload view, body_start). The body stays packed; the
-    exception streams are parsed separately by _pfor_exceptions."""
-    mv = memoryview(payload)
-    mn_zz, pos = blocks.take_uvarint(mv, 0)
-    mn = int(zigzag.decode(np.array([mn_zz], dtype=np.uint64))[0])
-    width = mv[pos]
-    pos += 1
-    return mn, width, mv, pos  # body starts at pos; caller slices lazily
-
-
-def _pfor_exceptions(mv: memoryview, body_start: int, count: int, width: int):
-    body_len = bitpack.packed_size(count, width)
-    pos = body_start + body_len
-    n_exc, pos = blocks.take_uvarint(mv, pos)
-    if not n_exc:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64)
-    rest = np.frombuffer(mv[pos:], dtype=np.uint8)
-    term = (rest & 0x80) == 0
-    ends = np.flatnonzero(term)
-    pos_stream_end = int(ends[n_exc - 1]) + 1
-    exc_pos = np.cumsum(leb128.decode(rest[:pos_stream_end], n_exc).view(np.int64))
-    exc_vals = leb128.decode(rest[pos_stream_end:], n_exc)
-    return exc_pos, exc_vals
-
-
-def pfor_get_range(payload: memoryview | bytes, count: int, start: int, n: int) -> np.ndarray:
-    """PFOR values[start:start+n]: fixed-stride body slice (only n*width
-    bits touched) + searchsorted patch of in-range exceptions — the
-    ``varintPFORGetAt`` shape (reference src/varintPFOR.c:261), never a
-    full-body decode."""
-    mn, width, mv, body_start = _pfor_parts(payload)
-    body = np.frombuffer(mv[body_start: body_start + bitpack.packed_size(count, width)],
-                         dtype=np.uint8)
-    offs = _unpack_range(body, width, start, n)
-    exc_pos, exc_vals = _pfor_exceptions(mv, body_start, count, width)
-    if len(exc_pos):
-        a = int(np.searchsorted(exc_pos, start, side="left"))
-        b = int(np.searchsorted(exc_pos, start + n, side="left"))
-        if b > a:
-            offs[exc_pos[a:b] - start] = exc_vals[a:b]
     return (offs + np.int64(mn).astype(np.uint64)).view(np.int64)
 
 
@@ -158,11 +110,6 @@ def get_at(block: bytes | memoryview, idx: int) -> int:
         return int(np.frombuffer(payload, dtype="<i8", count=1, offset=8 * idx)[0])
     if cid == FOR:
         return int(for_get_range(payload, count, idx, 1)[0])
-    if cid == PFOR:
-        # O(1) body stride + binary search of the delta-decoded exception
-        # positions (varintPFORGetAt, src/varintPFOR.c:261) — never decodes
-        # the packed body
-        return int(pfor_get_range(payload, count, idx, 1)[0])
     if cid == RLE_INT:
         return rle_get_at(payload, count, idx)
     if cid == DICT_INT:
@@ -180,8 +127,7 @@ def get_at(block: bytes | memoryview, idx: int) -> int:
         # O(1) per 128-value block (ref src/varintBP128.h:24)
         from . import bp128
         return int(bp128.get_range(payload, count, idx, 1)[0])
-    if cid in (DELTA, SEG_DELTA, DOD, LEB128_ZZ, ELIAS_GAMMA, DELTA_GAMMA,
-               ELIAS_DELTA):
+    if cid in (DELTA, SEG_DELTA, LEB128_ZZ, DELTA_GAMMA):
         # whole-chunk prefix-sum / bitstream codecs are inherently
         # sequential: full decode
         from ..selector import decode_int_block
@@ -190,7 +136,7 @@ def get_at(block: bytes | memoryview, idx: int) -> int:
 
 
 def get_range(block: bytes | memoryview, start: int, n: int) -> np.ndarray:
-    """Slice decode: O(n) for FOR/PLAIN/PFOR/DICT, O(runs + n) for RLE;
+    """Slice decode: O(n) for FOR/PLAIN/DICT, O(runs + n) for RLE;
     full decode only for the inherently-sequential stream codecs
     (DELTA / SEG_DELTA / LEB128_ZZ)."""
     cid, count, payload = blocks.unpack_block(block)
@@ -200,8 +146,6 @@ def get_range(block: bytes | memoryview, start: int, n: int) -> np.ndarray:
         return np.frombuffer(payload, dtype="<i8", count=n, offset=8 * start).astype(np.int64)
     if cid == FOR:
         return for_get_range(payload, count, start, n)
-    if cid == PFOR:
-        return pfor_get_range(payload, count, start, n)
     if cid == RLE_INT:
         return rle_get_range(payload, count, start, n)
     if cid == DICT_INT:
@@ -250,32 +194,12 @@ def for_filter_ge(payload: memoryview | bytes, count: int, c: int) -> np.ndarray
     return _packed_ge(body, width, count, int(c) - mn)
 
 
-def pfor_filter_ge(payload: memoryview | bytes, count: int, c: int) -> np.ndarray:
-    """PFOR: bit-sliced body compare + exception patch (the exception
-    positions' body bits are placeholders; their true offsets live in the
-    LEB128 exception stream, compared directly)."""
-    mn, width, mv, body_start = _pfor_parts(payload)
-    body = np.frombuffer(mv[body_start: body_start + bitpack.packed_size(count, width)],
-                         dtype=np.uint8)
-    cp = int(c) - mn
-    out = _packed_ge(body, width, count, cp)
-    exc_pos, exc_vals = _pfor_exceptions(mv, body_start, count, width)
-    if len(exc_pos):
-        if cp <= 0:
-            out[exc_pos] = True
-        elif cp >= 1 << 64:
-            out[exc_pos] = False
-        else:
-            out[exc_pos] = exc_vals >= np.uint64(cp)
-    return out
-
-
 def filter_ge(block: bytes | memoryview, c: int) -> np.ndarray:
     """Boolean mask ``v >= c`` evaluated on the ENCODED form wherever the
     layout admits it — the within-chunk predicate-pushdown surface:
 
     * PLAIN — zero-copy int64 view compare (nothing to decode)
-    * FOR / PFOR — bit-sliced packed-offset compare (values never rebuilt)
+    * FOR — bit-sliced packed-offset compare (values never rebuilt)
     * BP128 — per-128-block header bounds; only straddling blocks unpack
     * RLE — compare the run VALUES (O(runs)), expand booleans
     * DICT — compare the dictionary (O(uniq)), gather through the codes
@@ -307,8 +231,6 @@ def filter_ge(block: bytes | memoryview, c: int) -> np.ndarray:
         return np.frombuffer(payload, dtype="<i8", count=count) >= np.int64(c)
     if cid == FOR:
         return for_filter_ge(payload, count, c)
-    if cid == PFOR:
-        return pfor_filter_ge(payload, count, c)
     if cid == BP128_DELTA:
         from . import bp128
         return bp128.filter_ge(payload, count, c)
@@ -339,8 +261,8 @@ def filter_ge(block: bytes | memoryview, c: int) -> np.ndarray:
 
 def take_mask(block: bytes | memoryview, mask: np.ndarray) -> np.ndarray:
     """Values at mask-selected positions, decoding only the covering
-    ranges: contiguous selected runs become get_range calls (for FOR/PFOR/
-    DICT that touches only the runs' packed bits; range predicates over
+    ranges: contiguous selected runs become get_range calls (for FOR/DICT
+    that touches only the runs' packed bits; range predicates over
     ordered data select few runs). Stream codecs fall back to full decode
     inside get_range, as documented there."""
     idx = np.flatnonzero(mask)

@@ -16,7 +16,7 @@ Scale shape (the 100-TB contract):
   ``column ==`` filter that pushes into the blocks parquet scan) and
   evaluates the predicate on the ENCODED form via the random-access
   machinery — zero shuffle (mapInArrow over block rows), zero payload
-  decode for FOR/PFOR/DICT chunks, and chunks the caller pre-pruned by
+  decode for FOR/DICT chunks, and chunks the caller pre-pruned by
   zone map / Bloom sidecar never even enter. A delete touching k rows
   writes O(k/8) bytes of sidecar and rewrites ZERO payload bytes.
 - ``merge_dv`` is one shuffle over a table with one row per touched

@@ -500,7 +500,7 @@ def make_decode_where_udf(kinds: dict[str, str], out_cols: list[str],
         blks = table.column("block").to_pylist()
         by_col = dict(zip(names, blks))
         # the predicate runs against the ENCODED block — packed-offset
-        # compares for FOR/PFOR, header-bound 128-block pruning for BP128,
+        # compares for FOR, header-bound 128-block pruning for BP128,
         # sorted-dictionary find (eq) / lower-upper-bound code range
         # (prefix) / coalesced multi-find (isin) for DICT_STR; surviving
         # chunks are never fully decoded

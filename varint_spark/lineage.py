@@ -4,8 +4,7 @@ North-rule requirement: a killed job resumes without re-encoding completed
 partitions, with lineage rows (partition id, codec chosen, input/output
 bytes, digest) per partition.
 
-Storage layout (Iceberg-style commit semantics over plain parquet — the
-image has no Iceberg jars; ``_iceberg_available`` gates the real connector):
+Storage layout (Iceberg-style commit semantics over plain parquet):
 
     <root>/blocks/part_key=<k>/*.parquet   — encoded block rows
     <root>/lineage/*.parquet               — one row per (part_key, column)
@@ -30,14 +29,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .engine import EncodeOptions, encode_transcripts, lineage_summary, with_partition_keys
-
-
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: SLF001
-        return True
-    except Exception:
-        return False
 
 
 def _part_key_col() -> F.Column:
@@ -71,11 +62,10 @@ def read_blocks(spark: SparkSession, root: str) -> DataFrame:
     # case) costs nothing extra; a mixed store reads every footer once
     # and old files null-fill the new stat columns (the same semantics a
     # chunk without sidecars already has).
-    from .engine import BLOCK_SCHEMA_DDL
+    from .engine import _BLOCK_PA_SCHEMA
     p = str(Path(root) / "blocks")
     df = spark.read.parquet(p)
-    want = [f.strip().split()[0] for f in BLOCK_SCHEMA_DDL.split(",")]
-    if any(c not in df.columns for c in want):
+    if any(c not in df.columns for c in _BLOCK_PA_SCHEMA.names):
         df = spark.read.option("mergeSchema", "true").parquet(p)
     return df
 

@@ -23,12 +23,11 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 
-from .codecs import blocks, bitpack, bp128, delta, dict_codec, dod, elias, f64lossy, f64xor, foref, fsst, leb128, matrix, pfor, plain, rle, segdelta, strings, varint, zigzag
+from .codecs import blocks, bitpack, bp128, delta, dict_codec, elias, f64lossy, foref, fsst, leb128, matrix, plain, rle, segdelta, strings, varint, zigzag
 from .codecs.blocks import (
-    BP128_DELTA, DELTA, DELTA_GAMMA, DICT_INT, DICT_STR, DICT_STR_SHARED, DOD, ELIAS_DELTA, ELIAS_GAMMA,
-    F64_LOSSY, F64_XOR, FOR, FSST_STR,
-    FSST_STR_SHARED, LEB128_ZZ, NULLABLE, PFOR, PLAIN_INT, PLAIN_STR, RLE_INT,
-    SEG_DELTA, CODEC_NAMES,
+    BP128_DELTA, DELTA, DELTA_GAMMA, DICT_INT, DICT_STR, DICT_STR_SHARED,
+    F64_LOSSY, FOR, FSST_STR, FSST_STR_SHARED, LEB128_ZZ, NULLABLE, PLAIN_INT,
+    PLAIN_STR, RLE_INT, SEG_DELTA, CODEC_NAMES,
 )
 
 SAMPLE_THRESHOLD = 10_000  # beyond this, sample every 10th value (ref :77-125)
@@ -50,18 +49,16 @@ class IntStats:
     unique_ratio: float
     run_ratio: float
     avg_delta: float
-    outlier_ratio: float
 
 
 def analyze_ints(v: np.ndarray, diffs: np.ndarray | None = None,
-                 mn: int | None = None, mx: int | None = None,
-                 offs: np.ndarray | None = None) -> IntStats:
-    """``diffs``/``mn``/``mx``/``offs``: optional precomputed ``np.diff(v)``,
-    min, max and FOR offsets — the selector computes each ONCE and shares
-    them with the candidate sizers (the stats themselves are unchanged)."""
+                 mn: int | None = None, mx: int | None = None) -> IntStats:
+    """``diffs``/``mn``/``mx``: optional precomputed ``np.diff(v)``, min and
+    max — the selector computes each ONCE and shares them with the
+    candidate sizers (the stats themselves are unchanged)."""
     n = len(v)
     if n == 0:
-        return IntStats(0, 0, 0, True, 0.0, 0.0, 0.0, 0.0)
+        return IntStats(0, 0, 0, True, 0.0, 0.0, 0.0)
     if mn is None or mx is None:
         mn, mx = int(v.min()), int(v.max())
     if diffs is None:
@@ -72,13 +69,7 @@ def analyze_ints(v: np.ndarray, diffs: np.ndarray | None = None,
     n_runs = 1 + int(np.count_nonzero(diffs != 0))
     run_ratio = n_runs / n
     avg_delta = float(np.abs(diffs).mean()) if n > 1 else 0.0
-    # outliers relative to the 95th percentile of FOR offsets (ref :231-241)
-    if offs is None:
-        offs = v.view(np.uint64) - np.int64(mn).astype(np.uint64)
-    sample_offs = offs[::10] if n > SAMPLE_THRESHOLD else offs
-    p95 = np.percentile(sample_offs, 95)
-    outlier_ratio = float(np.count_nonzero(offs.astype(np.float64) > max(p95, 1.0) * 4) / n)
-    return IntStats(n, mn, mx, is_sorted, unique_ratio, run_ratio, avg_delta, outlier_ratio)
+    return IntStats(n, mn, mx, is_sorted, unique_ratio, run_ratio, avg_delta)
 
 
 _INT_ENCODERS = {
@@ -86,31 +77,22 @@ _INT_ENCODERS = {
     LEB128_ZZ: varint.encode,
     DELTA: delta.encode,
     FOR: foref.encode,
-    PFOR: pfor.encode,
     RLE_INT: rle.encode,
     DICT_INT: dict_codec.encode,
-    F64_XOR: f64xor.encode,
     BP128_DELTA: bp128.encode,
-    ELIAS_GAMMA: elias.encode,
     DELTA_GAMMA: elias.encode_delta,
-    ELIAS_DELTA: elias.encode_delta_code,
 }
 _INT_DECODERS = {
     PLAIN_INT: plain.decode_int,
     LEB128_ZZ: varint.decode,
     DELTA: delta.decode,
     FOR: foref.decode,
-    PFOR: pfor.decode,
     RLE_INT: rle.decode,
     DICT_INT: dict_codec.decode,
-    F64_XOR: f64xor.decode,
     SEG_DELTA: segdelta.decode,
-    DOD: dod.decode,
     F64_LOSSY: f64lossy.decode,
     BP128_DELTA: bp128.decode,
-    ELIAS_GAMMA: elias.decode,
     DELTA_GAMMA: elias.decode_delta,
-    ELIAS_DELTA: elias.decode_delta_code,
 }
 
 
@@ -118,9 +100,9 @@ def candidate_int_codecs(s: IntStats) -> list[int]:
     """Ordered decision tree — same shape as the reference's
     (src/varintAdaptive.c:244-310), nominating candidates for the cost
     gate. Every nominee is sized (the sizers are cheap analytic passes) —
-    an earlier [:5] cap could drop FOR/PFOR exactly when the run,
-    cardinality and sorted branches all fired, silently regressing size
-    (ADVICE r3); the full list is at most 8 entries."""
+    an earlier [:5] cap could drop FOR exactly when the run, cardinality
+    and sorted branches all fired, silently regressing size (ADVICE r3);
+    the full list is at most 6 entries."""
     cands: list[int] = []
     if s.run_ratio < 0.5:
         cands.append(RLE_INT)
@@ -134,20 +116,6 @@ def candidate_int_codecs(s: IntStats) -> list[int]:
         #                            delta distribution is heavy-tailed
         #                            (fixed widths pay the max, LEB128
         #                            pays ≥ 8 bits; gamma reaches 1)
-    if s.outlier_ratio > 0.005:
-        cands.append(PFOR)
-        if s.min > -(1 << 63) + 1:  # zigzag+1 headroom (elias.py guard)
-            cands.append(ELIAS_GAMMA)  # same regime as PFOR, but bit-exact
-            #                            per-value lengths (ref varintElias)
-    if s.min > -(1 << 63) + 1 and int(s.max) - int(s.min) >= 1 << 24:
-        cands.append(ELIAS_DELTA)  # Elias delta code proper (gamma-coded
-        #                            lengths): its regime is magnitudes
-        #                            spread across many octaves, where FOR
-        #                            pays the max width for every value and
-        #                            LEB128 pays byte-granular padding —
-        #                            signalled by a wide range, with or
-        #                            without outliers (int() avoids the
-        #                            max-min int64 overflow)
     cands.append(FOR)
     return cands
 
@@ -156,21 +124,15 @@ _INT_SIZERS = {
     LEB128_ZZ: varint.encoded_size,
     DELTA: delta.encoded_size,
     FOR: foref.encoded_size,
-    PFOR: pfor.encoded_size,
     RLE_INT: rle.encoded_size,
     DICT_INT: dict_codec.encoded_size,
-    F64_XOR: f64xor.encoded_size,
     BP128_DELTA: bp128.encoded_size,
-    ELIAS_GAMMA: elias.encoded_size,
     DELTA_GAMMA: elias.encoded_size_delta,
-    ELIAS_DELTA: elias.encoded_size_delta_code,
 }
 
 
 def encode_int_block(values: np.ndarray, stats: IntStats | None = None,
-                     is_f64_bits: bool = False,
                      segments: np.ndarray | None = None,
-                     allow_dod: bool = True,
                      zz_sizes: np.ndarray | None = None) -> bytes:
     """int64 array -> self-describing block, cost-gated.
 
@@ -200,14 +162,11 @@ def encode_int_block(values: np.ndarray, stats: IntStats | None = None,
     diffs = deltas_p[1:]
     mn, mx = int(v.min()), int(v.max())
     offs = v.view(np.uint64) - np.int64(mn).astype(np.uint64)
-    s = stats or analyze_ints(v, diffs=diffs, mn=mn, mx=mx, offs=offs)
+    s = stats or analyze_ints(v, diffs=diffs, mn=mn, mx=mx)
     zzv: np.ndarray | None = None  # lazy zigzag(v)
     # floors always compete: varint stream (reference-faithful) and plain
     best_id, best_size = PLAIN_INT, 8 * n
-    cands = candidate_int_codecs(s)
-    if is_f64_bits:
-        cands = [F64_XOR, *cands]  # float-aware candidate (Gorilla XOR)
-    for cid in (*cands, LEB128_ZZ):
+    for cid in (*candidate_int_codecs(s), LEB128_ZZ):
         if cid == LEB128_ZZ:
             if zz_sizes is None:
                 if zzv is None:
@@ -218,46 +177,24 @@ def encode_int_block(values: np.ndarray, stats: IntStats | None = None,
             size = delta.encoded_size(v, deltas=deltas_p)
         elif cid == FOR:
             size = foref.encoded_size(v, mn_offs=(mn, offs))
-        elif cid == PFOR:
-            size = pfor.encoded_size(v, mn_offs=(mn, offs))
         elif cid == RLE_INT:
             starts = np.concatenate(
                 [[0], np.flatnonzero(diffs != 0) + 1]).astype(np.int64)
             size = rle.encoded_size(v, starts=starts)
-        elif cid == ELIAS_GAMMA:
-            if zzv is None:
-                zzv = zigzag.encode(v)
-            size = elias.encoded_size(v, zz=zzv)
-        elif cid == ELIAS_DELTA:
-            if zzv is None:
-                zzv = zigzag.encode(v)
-            size = elias.encoded_size_delta_code(v, zz=zzv)
         elif cid == DELTA_GAMMA:
             size = elias.encoded_size_delta(v, zzd=zigzag.encode(diffs))
         else:
             size = _INT_SIZERS[cid](v)
         if size < best_size:
             best_id, best_size = cid, size
-    # built candidates: their nested stream re-enters the selector, so the
-    # choice isn't analytically sizable — build and compare actual bytes
+    # built candidate: its nested stream re-enters the selector (without
+    # segments, so it cannot recurse), so the choice isn't analytically
+    # sizable — build and compare actual bytes
     built: bytes | None = None
-    if allow_dod and s.is_sorted and n >= 4:
-        # delta-of-delta (reference examples/integration/delta_compression.c,
-        # examples/reference/timeseries_db.c:240-320): regular-cadence
-        # streams collapse the second derivative to ~0, which the nested
-        # selection RLEs far below any analytic candidate. The GCD-scaled
-        # varint floor pre-filter (an upper bound on the nested block up to
-        # its ~3-byte header) skips the build when DoD can't plausibly win.
-        prepared = dod.prepare(v, deltas=deltas_p)
-        if prepared[0] < best_size * 2:
-            cand = dod.encode(v, encode_int_block=_encode_int_block_nested,
-                              prepared=prepared)
-            if len(cand) < best_size:
-                best_id, best_size, built = DOD, len(cand), cand
     if segments is not None and 0 < len(segments) < n and best_size > n // 2:
         # segment-aware delta. Skipped when the winner is already under
         # ~0.5 B/value — seg-delta can't meaningfully beat that.
-        cand = segdelta.encode(v, segments, encode_int_block=_encode_int_block_nested)
+        cand = segdelta.encode(v, segments, encode_int_block=encode_int_block)
         if len(cand) < best_size:
             best_id, best_size, built = SEG_DELTA, len(cand), cand
     if built is not None:
@@ -269,13 +206,6 @@ def encode_int_block(values: np.ndarray, stats: IntStats | None = None,
     else:
         payload = _INT_ENCODERS[best_id](v)
     return blocks.pack_block(best_id, n, payload)
-
-
-def _encode_int_block_nested(values: np.ndarray) -> bytes:
-    """Nested-stream encoder for segdelta/dod — no further segment or
-    delta-of-delta recursion (a sorted nested stream would otherwise
-    build DoD-inside-DoD without bound)."""
-    return encode_int_block(values, allow_dod=False)
 
 
 def decode_int_block(buf: bytes | memoryview) -> np.ndarray:
@@ -489,8 +419,7 @@ def encode_column(values: pa.Array, kind: str, shared_col=None,
     def _enc_int(dense: np.ndarray, segs) -> bytes:
         if kind == "f64" and f64_precision is not None:
             return f64lossy.encode_block(dense, f64_precision)
-        return encode_int_block(dense, is_f64_bits=(kind == "f64"),
-                                segments=segs, zz_sizes=zz_sizes)
+        return encode_int_block(dense, segments=segs, zz_sizes=zz_sizes)
 
     if values.null_count:
         valid = ~np.asarray(values.is_null())
