@@ -380,3 +380,37 @@ def test_topk_and_groupby_respect_deletes(spark, enc):
     truth0 = {r.g: (r[1], r[2]) for r in
               df.groupBy("g").agg(F.count("*"), F.sum("v")).collect()}
     assert gb0 == truth0
+
+
+def test_ts_sums_past_int64_never_raise(spark):
+    """Epoch-µs sums leave int64 after a few thousand rows. Under ANSI
+    the aggregates must not raise: sum_val is NULL (the exact total does
+    not fit a long) and avg_val still comes from the exact total."""
+    from varint_spark.aggregate import groupby_agg_blocks
+
+    n, base, step = 12_000, 1_700_000_000_000_000, 1_000_003
+    df = spark.range(n).select(
+        F.col("id").alias("rid"), F.lit("g").alias("g"),
+        F.timestamp_micros(F.lit(base) + F.col("id") * step).alias("ts"))
+    opts = EncodeOptions(num_buckets=1, chunk_rows=4000, salt_span=1 << 20,
+                         group_col="g", order_col="rid")
+    kinds = {"rid": "int64", "g": "str", "ts": "ts"}
+    blocks = encode_transcripts(df, opts, kinds=kinds).cache()
+    ts_meta = blocks.filter(F.col("column") == "ts")
+    # three chunks, each chunk's own sum fits int64 and is stored
+    assert ts_meta.count() == 3
+    assert ts_meta.filter(F.col("sum_val").isNull()).count() == 0
+    want = sum(base + i * step for i in range(n))
+    assert want > 2**63 - 1
+
+    for agg in (aggregate_blocks_meta(blocks, ["rid", "ts"]),
+                aggregate_blocks(blocks, ["rid", "ts"], kinds)):
+        got = {r.column: r for r in agg.collect()}
+        assert got["ts"].sum_val is None and got["ts"].n_sum_missing == 0
+        assert got["ts"].avg_val == pytest.approx(want / n, rel=1e-15)
+        assert (got["ts"].min_val, got["ts"].max_val) == (
+            base, base + (n - 1) * step)
+        assert got["rid"].sum_val == n * (n - 1) // 2
+
+    g = groupby_agg_blocks(blocks, "g", "ts", kinds).collect()
+    assert [(r.g, r.n_rows, r.sum_val) for r in g] == [("g", n, None)]

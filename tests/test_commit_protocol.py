@@ -83,45 +83,54 @@ def test_crashed_upsert_is_invisible_and_retry_converges(spark, tmp_path):
 
 
 def test_crashed_encode_reencodes_on_retry(spark, tmp_path):
-    root = str(tmp_path / "store")
     a = _batch(spark, 0, 500)
-    r1 = encode_checkpointed(a, root, OPTS)
-    os.remove(f"{root}/commits/{r1['commit']}")  # crash before marker
-    assert read_snapshot(spark, root, DDL).count() == 0  # nothing visible
+    # a crash before the marker; on a store's very first commit that
+    # leaves no commits dir at all — both read as an empty store
+    for crash in ("marker", "commits_dir"):
+        root = str(tmp_path / crash)
+        r1 = encode_checkpointed(a, root, OPTS)
+        if crash == "marker":
+            os.remove(f"{root}/commits/{r1['commit']}")
+        else:
+            shutil.rmtree(f"{root}/commits")
+        assert committed_ids(root) == set()
+        assert read_snapshot(spark, root, DDL).count() == 0  # nothing visible
 
-    # retry must NOT trust the unmanifested lineage (else the rows would
-    # be skipped into permanent invisibility)
-    r2 = encode_checkpointed(a, root, OPTS)
-    assert r2["partitions_skipped"] == 0 and r2["partitions_encoded"] > 0
-    got = _pdf(read_snapshot(spark, root, DDL))
-    pd.testing.assert_frame_equal(got, _pdf(a))
-    assert got.event_id.is_unique  # overwrite, not duplication
+        # retry must NOT trust the unmanifested lineage (else the rows
+        # would be skipped into permanent invisibility)
+        r2 = encode_checkpointed(a, root, OPTS)
+        assert r2["partitions_skipped"] == 0
+        assert r2["partitions_encoded"] == r1["partitions_encoded"] > 0
+        got = _pdf(read_snapshot(spark, root, DDL))
+        pd.testing.assert_frame_equal(got, _pdf(a))
+        assert got.event_id.is_unique  # overwrite, not duplication
 
 
-def test_legacy_store_upgrades_in_place(spark, tmp_path):
+def test_vacuum_ignores_unmanifested_lineage(spark, tmp_path):
+    """An encode that crashed after its lineage append but before its
+    marker left block dirs no reader sees; vacuum must count them as
+    orphans, not as referenced by the (unmanifested) lineage."""
+    from varint_spark.lineage import read_lineage, vacuum
+
     root = str(tmp_path / "store")
-    a = _batch(spark, 0, 500)
-    encode_checkpointed(a, root, OPTS)
-    blocks = read_blocks(spark, root).drop("pk")
-    delete_checkpointed(delete_where(blocks, "v", lo=0, hi=99), root)
-    want = _pdf(a.filter(~F.col("v").between(0, 99)))
+    opts = EncodeOptions(num_buckets=2, chunk_rows=128, salt_span=512,
+                         group_col="g", order_col="event_id")
+    a = _batch(spark, 0, 512)
+    encode_checkpointed(a, root, opts)
+    a_keys = {r.part_key for r in read_lineage(spark, root)
+              .select("part_key").distinct().collect()}
+    rb = encode_checkpointed(_batch(spark, 512, 1024), root, opts)
+    b_keys = {r.part_key for r in read_lineage(spark, root)
+              .filter(F.col("commit") == rb["commit"])
+              .select("part_key").distinct().collect()}
+    assert b_keys and not (a_keys & b_keys)  # B landed in new part_keys
+    os.remove(f"{root}/commits/{rb['commit']}")  # crash before marker
 
-    shutil.rmtree(f"{root}/commits")  # the pre-manifest on-disk layout
-    assert committed_ids(root) is None
-    # ungated legacy read still exact
-    pd.testing.assert_frame_equal(_pdf(read_snapshot(spark, root, DDL)), want)
-
-    # first manifest-aware write backfills markers for the old commits
-    blocks = read_blocks(spark, root).drop("pk")
-    delete_checkpointed(delete_where(blocks, "v", lo=900, hi=999), root)
-    assert {1, 2, 3} <= committed_ids(root)
-    pd.testing.assert_frame_equal(
-        _pdf(read_snapshot(spark, root, DDL)),
-        _pdf(a.filter(~F.col("v").between(0, 99)
-                      & ~F.col("v").between(900, 999))))
-    # and the old history is still addressable
-    pd.testing.assert_frame_equal(
-        _pdf(read_snapshot(spark, root, DDL, as_of=2)), want)
+    assert vacuum(spark, root, dry_run=True)["orphans"] == sorted(b_keys)
+    r = vacuum(spark, root)
+    assert r["orphans"] == sorted(b_keys) and r["removed"] == len(b_keys)
+    pd.testing.assert_frame_equal(_pdf(read_snapshot(spark, root, DDL)),
+                                  _pdf(a))
 
 
 def test_vacuum_reclaims_crashed_overlay(spark, tmp_path):

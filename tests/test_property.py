@@ -6,11 +6,14 @@ generated ones)."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from varint_spark.codecs import leb128, segdelta
 from varint_spark.selector import (
-    decode_int_block, decode_str_block, encode_int_block, encode_str_block,
+    decode_column, decode_int_block, decode_str_block, encode_column,
+    encode_int_block, encode_str_block,
 )
 
 I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
@@ -261,3 +264,34 @@ def test_deletion_vector_mask_property(n, dels):
     merged = bitmap.bitmap_or(bitmap.encode(np.array(half, dtype=np.int64)),
                               bitmap.encode(np.array(other, dtype=np.int64)))
     assert merged == dv
+
+
+_COLUMN_VALUES = {
+    "int": st.one_of(st.none(), I64, st.integers(-300, 300)),
+    "f64": st.one_of(st.none(), st.floats(width=64)),
+    "str": st.one_of(st.none(), st.text(max_size=24),
+                     st.sampled_from(["", "error", "warn", "info"])),
+}
+
+
+@settings(max_examples=120, deadline=None)
+@given(st.sampled_from(sorted(_COLUMN_VALUES)).flatmap(
+    lambda kind: st.tuples(st.just(kind),
+                           st.lists(_COLUMN_VALUES[kind], max_size=80))))
+def test_truncated_block_never_decodes(case):
+    """A block cut short anywhere must raise from decode_column — never
+    decode to a plausible (wrong or short) array."""
+    from varint_spark.engine import _col_to_int64
+
+    kind, xs = case
+    if kind == "str":
+        arr = pa.array(xs, type=pa.large_utf8())
+    elif kind == "f64":  # the engine stores f64 as its int64 bit pattern
+        arr = _col_to_int64(pa.array(xs, type=pa.float64()), "f64")
+    else:
+        arr = pa.array(xs, type=pa.int64())
+    blk = encode_column(arr, kind)
+    assert decode_column(blk).to_pylist() == arr.to_pylist()
+    for cut in range(len(blk)):
+        with pytest.raises((ValueError, IndexError)):
+            decode_column(blk[:cut])

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from varint_spark.deletes import delete_where
 from varint_spark.engine import EncodeOptions
 from varint_spark.lineage import (delete_checkpointed, encode_checkpointed,
-                                  read_blocks, read_lineage, read_snapshot)
+                                  read_blocks, read_snapshot)
 
 DDL = "event_id bigint, g bigint, v bigint"
 OPTS = EncodeOptions(num_buckets=2, chunk_rows=128, salt_span=512,
@@ -76,27 +76,6 @@ def test_snapshot_history(spark, tmp_path):
         _pdf(read_snapshot(spark, root, DDL)), _pdf(expect[4]))
     # as_of before the first commit: no partitions
     assert read_snapshot(spark, root, DDL, as_of=0).count() == 0
-
-
-def test_pre_commit_store_reads_as_commit_zero(spark, tmp_path):
-    """Backward compat: a lineage written before commit tagging (no
-    commit column) reads as commit 0 and stays snapshot-readable."""
-    root = str(tmp_path / "store")
-    a = _batch(spark, 0, 500)
-    encode_checkpointed(a, root, OPTS)
-    # rewrite the lineage without the commit column (the old format)
-    lin = read_lineage(spark, root).drop("commit").toPandas()
-    import shutil
-    shutil.rmtree(f"{root}/lineage")
-    spark.createDataFrame(lin).write.parquet(f"{root}/lineage")
-
-    assert read_lineage(spark, root).agg(F.max("commit")).first()[0] == 0
-    pd.testing.assert_frame_equal(
-        _pdf(read_snapshot(spark, root, DDL, as_of=0)), _pdf(a))
-    # the next write continues the history at commit 1
-    b = _batch(spark, 500, 1000)
-    r = encode_checkpointed(a.unionByName(b), root, OPTS)
-    assert r["commit"] == 1
 
 
 def test_snapshot_missing_store(spark, tmp_path):
@@ -206,7 +185,7 @@ def test_flatten_resets_read_amplification(spark, tmp_path):
     assert not os.path.exists(f"{new_root}/deletes")
     # history flattening is explicit: the new store starts at commit 1
     from varint_spark.lineage import committed_ids
-    assert committed_ids(new_root) == {0, 1}
+    assert committed_ids(new_root) == {1}
 
 
 def test_upsert_with_schema_evolution(spark, tmp_path):

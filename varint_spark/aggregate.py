@@ -24,8 +24,11 @@ Two entry points:
   has a stored sum, decode-and-sum for the (rare) overflow chunks only,
   per column. The decode branch reads payloads solely for those chunks.
 
-All values are the engine's int64 zone domain (epoch-µs for ts kinds);
-``avg_val`` is derived as sum / non-null count in double.
+All values are the engine's int64 zone domain (epoch-µs for ts kinds).
+Sums run in ``decimal(38,0)``, so no total can overflow (Spark's ANSI
+mode would raise on an int64 sum of a few thousand epoch-µs values):
+``sum_val`` is the exact total as a long, NULL when it leaves int64, and
+``avg_val`` is that exact total / non-null count in double.
 """
 
 from __future__ import annotations
@@ -41,6 +44,11 @@ _OUT_DDL = ("column string, n_rows long, n_nonnull long, min_val long, "
             "max_val long, sum_val long, avg_val double, n_sum_missing long")
 
 
+def _dec_sum(col: F.Column) -> F.Column:
+    """Exact sum of int64 values: 38 digits hold any int64 total."""
+    return F.sum(col.cast("decimal(38,0)"))
+
+
 def _meta_stats(blocks: DataFrame, columns: list[str]) -> DataFrame:
     meta = blocks.filter(F.col("column").isin(list(columns)))
     # a chunk contributes to the sum iff it has non-null values; its
@@ -52,7 +60,7 @@ def _meta_stats(blocks: DataFrame, columns: list[str]) -> DataFrame:
         (F.sum("count") - F.sum("null_count")).alias("n_nonnull"),
         F.min("min_val").alias("min_val"),
         F.max("max_val").alias("max_val"),
-        F.sum("sum_val").alias("_sum_meta"),
+        _dec_sum(F.col("sum_val")).alias("_sum_meta"),
         F.sum(missing).alias("n_sum_missing"))
 
 
@@ -60,7 +68,7 @@ def _finish(stats: DataFrame, sum_expr) -> DataFrame:
     total = F.when(F.col("n_nonnull") > 0, sum_expr)
     return stats.select(
         "column", "n_rows", "n_nonnull", "min_val", "max_val",
-        total.alias("sum_val"),
+        total.try_cast("long").alias("sum_val"),  # NULL outside int64
         (total.cast("double") / F.col("n_nonnull")).alias("avg_val"),
         "n_sum_missing")
 
@@ -71,7 +79,8 @@ def aggregate_blocks_meta(blocks: DataFrame,
     n_nonnull, min/max/sum/avg — computed purely from the lineage stat
     columns (no ``block`` bytes read; plan-tested). ``sum_val`` is NULL
     when any contributing chunk lacks a stored sum (``n_sum_missing``
-    says how many) — use :func:`aggregate_blocks` for the exact hybrid."""
+    says how many) or the total leaves int64 — use
+    :func:`aggregate_blocks` for the exact hybrid."""
     ok = F.when(F.col("n_sum_missing") == 0, F.col("_sum_meta"))
     return _finish(_meta_stats(blocks, columns), ok)
 
@@ -110,28 +119,30 @@ def aggregate_blocks(blocks: DataFrame, columns: list[str],
                 F.count(F.lit(1)).alias("_n_d"),
                 F.count(v).alias("_nn_d"),
                 F.min(v).alias("_min_d"), F.max(v).alias("_max_d"),
-                F.sum(v).alias("_sum_d")).withColumn("column", F.lit(c)))
+                _dec_sum(v).alias("_sum_d")).withColumn("column", F.lit(c)))
         dirty = dirty_parts[0]
         for d_ in dirty_parts[1:]:
             dirty = dirty.unionByName(d_)
-        base = aggregate_blocks(blocks, columns, kinds)  # clean chunks
-        j = base.join(dirty, "column", "full_outer")
+        base = _hybrid_stats(blocks, columns, kinds)  # clean chunks
         z = lambda col: F.coalesce(F.col(col), F.lit(0))  # noqa: E731
-        n_rows = (z("n_rows") + z("_n_d")).alias("n_rows")
-        n_nonnull = (z("n_nonnull") + z("_nn_d")).alias("n_nonnull")
-        # the recursive clean-side call is the exact hybrid: its sum_val
-        # is NULL only when the clean side has no non-null rows, which
-        # coalesce-to-0 handles; no n_sum_missing gating needed here
-        any_nn = (z("n_nonnull") + z("_nn_d")) > 0
-        total = F.when(any_nn, z("sum_val") + z("_sum_d"))
-        return j.select(
-            "column", n_rows, n_nonnull,
+        # the clean-side _total is exact (the hybrid decodes overflow
+        # chunks), so no n_sum_missing gating is needed here
+        j = base.join(dirty, "column", "full_outer").select(
+            "column",
+            (z("n_rows") + z("_n_d")).alias("n_rows"),
+            (z("n_nonnull") + z("_nn_d")).alias("n_nonnull"),
             F.least("min_val", "_min_d").alias("min_val"),
             F.greatest("max_val", "_max_d").alias("max_val"),
-            total.alias("sum_val"),
-            (total.cast("double") /
-             (z("n_nonnull") + z("_nn_d"))).alias("avg_val"),
+            (z("_total") + z("_sum_d")).alias("_total"),
             F.coalesce("n_sum_missing", F.lit(0)).alias("n_sum_missing"))
+        return _finish(j, F.col("_total"))
+    return _finish(_hybrid_stats(blocks, columns, kinds), F.col("_total"))
+
+
+def _hybrid_stats(blocks: DataFrame, columns: list[str],
+                  kinds: dict[str, str]) -> DataFrame:
+    """:func:`_meta_stats` plus ``_total``, the exact decimal sum:
+    stored chunk sums, and a decode-and-sum of the overflow chunks."""
     stats = _meta_stats(blocks, columns)
     fallbacks = []
     for c in columns:  # driver loop over column NAMES (schema-sized)
@@ -142,15 +153,14 @@ def aggregate_blocks(blocks: DataFrame, columns: list[str],
         v = F.col(c)
         if kind in ("ts", "tsntz"):
             v = F.unix_micros(F.to_timestamp(c))  # the zone int64 domain
-        fallbacks.append(dec.agg(F.sum(v).alias("_sum_fb"))
+        fallbacks.append(dec.agg(_dec_sum(v).alias("_sum_fb"))
                          .withColumn("column", F.lit(c)))
     fb = fallbacks[0]
     for f_ in fallbacks[1:]:
         fb = fb.unionByName(f_)
-    joined = stats.join(fb, "column", "left")
-    exact = (F.coalesce(F.col("_sum_meta"), F.lit(0))
-             + F.coalesce(F.col("_sum_fb"), F.lit(0)))
-    return _finish(joined, exact)
+    return stats.join(fb, "column", "left").withColumn(
+        "_total", F.coalesce(F.col("_sum_meta"), F.lit(0))
+        + F.coalesce(F.col("_sum_fb"), F.lit(0)))
 
 
 def groupby_agg_blocks(blocks: DataFrame, group_col: str, val_col: str,
@@ -172,7 +182,8 @@ def groupby_agg_blocks(blocks: DataFrame, group_col: str, val_col: str,
     both branches aggregate exactly; a final groupBy folds the two.
     String groups use the string zone stats (ASCII ≤64 regime; chunks
     with NULL stats take the decode branch — sound, just slower).
-    Output: (group, n_rows, n_nonnull, min_val, max_val, sum_val)."""
+    Output: (group, n_rows, n_nonnull, min_val, max_val, sum_val);
+    sum_val is NULL when the group's exact total leaves int64."""
     gkind, vkind = kinds[group_col], kinds[val_col]
     g_is_str = gkind == "str"
     glo, ghi = ("min_str", "max_str") if g_is_str else ("min_val", "max_val")
@@ -204,7 +215,7 @@ def groupby_agg_blocks(blocks: DataFrame, group_col: str, val_col: str,
         F.col("count").alias("n_rows"),
         (F.col("count") - F.col("null_count")).alias("n_nonnull"),
         "min_val", "max_val",
-        F.coalesce("sum_val", F.lit(0)).alias("sum_val"))
+        F.coalesce("sum_val", F.lit(0)).cast("decimal(38,0)").alias("sum_val"))
 
     # boundary/overflow chunks: decode ONLY those (left_anti on the
     # single-group chunk ids keeps the scan filter metadata-sized)
@@ -222,7 +233,7 @@ def groupby_agg_blocks(blocks: DataFrame, group_col: str, val_col: str,
     slow = dec.groupBy(group_col).agg(
         F.count("*").alias("n_rows"), F.count(v).alias("n_nonnull"),
         F.min(v).alias("min_val"), F.max(v).alias("max_val"),
-        F.coalesce(F.sum(v), F.lit(0)).alias("sum_val"))
+        F.coalesce(_dec_sum(v), F.lit(0)).alias("sum_val"))
     if g_is_str:
         slow = slow.withColumn(group_col, F.col(group_col).cast("string"))
     elif gkind in ("ts", "tsntz"):
@@ -239,7 +250,8 @@ def groupby_agg_blocks(blocks: DataFrame, group_col: str, val_col: str,
         F.sum("n_nonnull").alias("n_nonnull"),
         F.min("min_val").alias("min_val"),
         F.max("max_val").alias("max_val"),
-        F.when(F.sum("n_nonnull") > 0, F.sum("sum_val")).alias("sum_val"))
+        F.when(F.sum("n_nonnull") > 0, F.sum("sum_val"))
+        .try_cast("long").alias("sum_val"))
 
 
 def approx_distinct_blocks(blocks: DataFrame,

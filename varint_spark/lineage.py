@@ -1,13 +1,22 @@
-"""Per-partition lineage + checkpoint/resume for the encode job.
+"""Per-partition lineage, checkpoint/resume and crash-atomic commits for
+the block store.
 
-North-rule requirement: a killed job resumes without re-encoding completed
-partitions, with lineage rows (partition id, codec chosen, input/output
-bytes, digest) per partition.
+A killed job resumes without re-encoding completed partitions, with
+lineage rows (partition id, codec chosen, input/output bytes, digest)
+per partition.
 
 Storage layout (Iceberg-style commit semantics over plain parquet):
 
-    <root>/blocks/part_key=<k>/*.parquet   — encoded block rows
-    <root>/lineage/*.parquet               — one row per (part_key, column)
+    <root>/blocks/pk=<k>/*.parquet   — encoded block rows
+    <root>/lineage/*.parquet         — one row per (part_key, column)
+    <root>/deletes/*.parquet         — deletion-vector appends
+    <root>/overlays/<commit>/        — merge-on-read upsert stores
+    <root>/commits/<id>              — one empty marker per commit
+
+Every lineage and delete-log row carries the id of the commit that wrote
+it, and every reader sees only rows whose id has a marker under
+``commits/``. A store has ``commits/`` from its first commit on; a store
+without markers has no committed data and reads as empty.
 
 Protocol:
 
@@ -17,9 +26,11 @@ Protocol:
    partition after a crash replaces its directory instead of duplicating
    rows (idempotent because block contents are deterministic —
    tests/test_engine_e2e.py::test_determinism_across_parallelism).
-3. Lineage rows are appended only after the block write commits; a crash
-   between the two leaves orphan block dirs that the next run simply
-   overwrites.
+3. Lineage rows are appended only after the block write commits, and the
+   commit marker only after the lineage. A crash before the marker leaves
+   block dirs and lineage rows that readers ignore; the next run
+   re-encodes those partitions under a fresh id, and ``vacuum`` reclaims
+   dirs no run re-covers.
 """
 
 from __future__ import annotations
@@ -38,36 +49,20 @@ def _part_key_col() -> F.Column:
     return F.format_string("%06d:%04d", F.col("_bucket"), F.col("_salt"))
 
 
-def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
-    p = Path(root) / "lineage"
-    if not p.exists() or not any(p.glob("*.parquet")):
+def _read_log(spark: SparkSession, path: Path) -> DataFrame | None:
+    if not path.exists() or not any(path.glob("*.parquet")):
         return None
-    # mergeSchema: stores written before commit tagging mix files with and
-    # without the commit column; absent values read as commit 0 (the
-    # pre-history epoch), so old stores stay snapshot-readable
-    lin = spark.read.option("mergeSchema", "true").parquet(str(p))
-    if "commit" not in lin.columns:
-        lin = lin.withColumn("commit", F.lit(0))
-    return lin.withColumn("commit", F.coalesce(F.col("commit"), F.lit(0)))
+    return spark.read.parquet(str(path))
+
+
+def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
+    """Every lineage row on disk, committed or not (None before the first
+    append) — ``_committed_lineage`` is the view readers use."""
+    return _read_log(spark, Path(root) / "lineage")
 
 
 def read_blocks(spark: SparkSession, root: str) -> DataFrame:
-    # Schema-drift guard (ADVICE r6): an r6+ resume append into an older
-    # store mixes block files with and without the r6 stat columns
-    # (sum_val/bloom/hll); footer SAMPLING may pick an old file and drop
-    # the new columns nondeterministically, breaking the stats-dependent
-    # readers (aggregate_blocks, prune_chunks_bloom). Pay the full
-    # mergeSchema footer scan ONLY when the sampled schema is actually
-    # missing engine columns — a uniform store (the overwhelmingly common
-    # case) costs nothing extra; a mixed store reads every footer once
-    # and old files null-fill the new stat columns (the same semantics a
-    # chunk without sidecars already has).
-    from .engine import _BLOCK_PA_SCHEMA
-    p = str(Path(root) / "blocks")
-    df = spark.read.parquet(p)
-    if any(c not in df.columns for c in _BLOCK_PA_SCHEMA.names):
-        df = spark.read.option("mergeSchema", "true").parquet(p)
-    return df
+    return spark.read.parquet(str(Path(root) / "blocks"))
 
 
 # --- commit manifests: crash-atomic multi-file commits ---------------------
@@ -77,20 +72,19 @@ def read_blocks(spark: SparkSession, root: str) -> DataFrame:
 # <root>/commits/<id> is written LAST; readers honor only manifested
 # commit ids, so a crash mid-commit leaves every partial write INVISIBLE
 # (the table reads as if the commit never started) rather than
-# half-applied. The next operation takes a fresh id (next_commit scans
-# partials too), so crashed ids are never reused; their garbage stays
-# invisible forever. Stores written before manifests existed have no
-# commits dir and read ungated; the first manifest-aware write backfills
-# markers for every id already present (those were fully readable, hence
-# fully committed, under the single-writer assumption).
+# half-applied. Ids start at 1. The next operation takes a fresh id
+# (next_commit scans partials too), so crashed ids are never reused;
+# their garbage stays invisible until ``vacuum`` reclaims it. A store
+# gets its commits dir with its first marker, so a store that crashed
+# before its first marker has none and reads as empty.
 
 
-def committed_ids(root: str) -> set[int] | None:
-    """Manifested commit ids, or None for a legacy store (no commits
-    dir => no gating)."""
+def committed_ids(root: str) -> set[int]:
+    """Manifested commit ids of the store at ``root`` (empty before its
+    first commit)."""
     p = Path(root) / "commits"
     if not p.exists():
-        return None
+        return set()
     return {int(f.name) for f in p.iterdir() if f.name.isdigit()}
 
 
@@ -100,49 +94,40 @@ def _write_manifest(root: str, commit: int) -> None:
     (p / str(commit)).touch()
 
 
-def _ensure_manifests(spark: SparkSession, root: str) -> None:
-    """Upgrade a legacy store in place: backfill a marker for every
-    commit id already observable (they were readable before, hence fully
-    committed)."""
-    if committed_ids(root) is not None:
-        return
-    ids = {0}
-    lin = read_lineage(spark, root)
-    if lin is not None:
-        ids |= {r.commit for r in lin.select("commit").distinct().collect()}
-    log = read_delete_log(spark, root)
-    if log is not None:
-        ids |= {r.commit for r in log.select("commit").distinct().collect()}
-    for c, od in _overlay_commits(root):
-        ids.add(c)
-        log = read_delete_log(spark, od)
-        if log is not None:
-            ids |= {r.commit
-                    for r in log.select("commit").distinct().collect()}
-    for c in ids:
-        _write_manifest(root, c)
+def _gate_commits(df: DataFrame, allowed: set[int]) -> DataFrame:
+    """Keep rows whose commit id is in ``allowed`` (the manifested ids).
 
-
-def _gate_commits(df: DataFrame, allowed: set[int] | None) -> DataFrame:
-    """Keep rows whose commit id is manifested (commit 0 — the
-    pre-manifest epoch — always passes).
-
-    The predicate is a RANGE over the contiguous manifested prefix plus
-    an isin() of only the out-of-order tail (ids above the first gap —
-    crashed ids never reused, so the tail is empty or tiny). Inlining
-    every id (r6) grew the plan O(total commits) for the lifetime of the
-    table: a streaming store at one commit per micro-batch degraded every
-    snapshot read's planning time — ADVICE r6."""
-    if allowed is None:
-        return df
+    The predicate is a RANGE over the contiguous manifested prefix 1..hi
+    plus an isin() of only the out-of-order tail (ids above the first gap
+    — crashed ids are never reused, so the tail is empty or tiny).
+    Inlining every id (r6) grew the plan O(total commits) for the
+    lifetime of the table: a streaming store at one commit per
+    micro-batch degraded every snapshot read's planning time — ADVICE r6."""
     hi = 0
     while (hi + 1) in allowed:
         hi += 1
-    cond = F.col("commit") <= hi  # covers the pre-manifest epoch 0 too
+    cond = F.col("commit") <= hi
     extras = sorted(int(x) for x in allowed if x > hi)
     if extras:
         cond = cond | F.col("commit").isin(extras)
     return df.filter(cond)
+
+
+def _committed_lineage(spark: SparkSession, root: str) -> DataFrame | None:
+    """The lineage rows of manifested commits — the one view resume,
+    snapshot reads and ``vacuum`` trust (None before the first append)."""
+    lin = read_lineage(spark, root)
+    return None if lin is None else _gate_commits(lin, committed_ids(root))
+
+
+def _dml_targets(root: str) -> list[str]:
+    """The stores a table-level DML must touch: the base (once it has
+    blocks) plus every overlay whose creation commit is manifested — a
+    crashed overlay is invisible to reads, so marking its rows would be
+    wasted sidecar bytes."""
+    allowed = committed_ids(root)
+    base = [root] if (Path(root) / "blocks").exists() else []
+    return base + [od for c, od in _overlay_commits(root) if c in allowed]
 
 
 def encode_checkpointed(df: DataFrame, root: str,
@@ -160,15 +145,12 @@ def encode_checkpointed(df: DataFrame, root: str,
     from straddling a committed salt group."""
     spark = df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    _ensure_manifests(spark, root)
 
     keyed = with_partition_keys(df, opts).withColumn("_part_key", _part_key_col())
     # resume trusts only MANIFESTED lineage: a crash between the lineage
     # append and the manifest leaves rows that readers ignore — those
     # partitions must re-encode, not be skipped into invisibility
-    lin = read_lineage(spark, root)
-    if lin is not None:
-        lin = _gate_commits(lin, committed_ids(root))
+    lin = _committed_lineage(spark, root)
     skipped = 0
     if lin is not None:
         done = lin.select("part_key").distinct()
@@ -208,11 +190,11 @@ def encode_checkpointed(df: DataFrame, root: str,
 def vacuum(spark: SparkSession, root: str, dry_run: bool = False,
            orphan_overlays: bool = False) -> dict:
     """Garbage-collect block partition directories that no committed
-    lineage row references — the debris a crash between the block write
-    and the lineage append leaves behind (protocol step 3 above). Normally
-    the next run's dynamic-partition overwrite replaces them, but a
-    pipeline that never re-runs (or re-runs with a narrower input) keeps
-    paying their storage forever; ``vacuum`` is the explicit reclaim, the
+    lineage row references — the debris a crash before the commit marker
+    leaves behind (protocol step 3 above). Normally the next run's
+    dynamic-partition overwrite replaces them, but a pipeline that never
+    re-runs (or re-runs with a narrower input) keeps paying their
+    storage forever; ``vacuum`` is the explicit reclaim, the
     same contract as Delta/Iceberg VACUUM: only UNREFERENCED partition
     dirs are touched, so readers of committed data are never affected.
 
@@ -236,7 +218,7 @@ def vacuum(spark: SparkSession, root: str, dry_run: bool = False,
     on_disk = {unquote(p.name.split("=", 1)[1]): p
                for p in blocks_dir.glob("pk=*") if p.is_dir()} \
         if blocks_dir.exists() else {}
-    lin = read_lineage(spark, root)
+    lin = _committed_lineage(spark, root)
     committed = set() if lin is None else {
         r.part_key for r in lin.select("part_key").distinct().collect()}
     orphans = sorted(k for k in on_disk if k not in committed)
@@ -247,12 +229,11 @@ def vacuum(spark: SparkSession, root: str, dry_run: bool = False,
     dead_overlays: list[int] = []
     if orphan_overlays:
         allowed = committed_ids(root)
-        if allowed is not None:  # a legacy store has no crashed commits
-            for c, od in _overlay_commits(root):
-                if c not in allowed:
-                    dead_overlays.append(c)
-                    if not dry_run:
-                        shutil.rmtree(od)
+        for c, od in _overlay_commits(root):
+            if c not in allowed:
+                dead_overlays.append(c)
+                if not dry_run:
+                    shutil.rmtree(od)
     return {"orphans": orphans,
             "removed": 0 if dry_run else len(orphans) + len(dead_overlays),
             "orphan_overlays": dead_overlays}
@@ -299,10 +280,7 @@ def next_commit(spark: SparkSession, root: str) -> int:
 
 
 def read_delete_log(spark: SparkSession, root: str) -> DataFrame | None:
-    p = Path(root) / "deletes"
-    if not p.exists() or not any(p.glob("*.parquet")):
-        return None
-    return spark.read.parquet(str(p))
+    return _read_log(spark, Path(root) / "deletes")
 
 
 def delete_checkpointed(dv: DataFrame, root: str,
@@ -315,7 +293,6 @@ def delete_checkpointed(dv: DataFrame, root: str,
     Append-only, manifest written last — a crash mid-append leaves rows
     readers ignore (unmanifested id), never a half-applied delete."""
     spark = dv.sparkSession
-    _ensure_manifests(spark, root)
     if commit is None:
         commit = next_commit(spark, root)
     tagged = dv.withColumn("commit", F.lit(commit))
@@ -332,14 +309,16 @@ def read_deletes(spark: SparkSession, root: str,
                  allowed: set[int] | None = None) -> DataFrame | None:
     """The merged deletion-vector state at version ``as_of`` (latest when
     None): one vector per touched chunk, commits OR-folded container-level
-    (varint_spark.deletes.merge_dv). ``allowed``: manifested commit ids —
+    (varint_spark.deletes.merge_dv). Only appends whose commit id is in
+    ``allowed`` count (default: the store's own manifested ids) —
     unmanifested (crashed) delete appends are ignored."""
     from .deletes import merge_dv
 
     log = read_delete_log(spark, root)
     if log is None:
         return None
-    log = _gate_commits(log, allowed)
+    log = _gate_commits(log, committed_ids(root) if allowed is None
+                        else allowed)
     if as_of is not None:
         log = log.filter(F.col("commit") <= as_of)
     return merge_dv(log.drop("commit"))
@@ -348,26 +327,23 @@ def read_deletes(spark: SparkSession, root: str,
 def _read_snapshot_single(spark: SparkSession, root: str, schema_ddl: str,
                           as_of: int | None, kinds, shared, columns,
                           missing_ok: bool,
-                          dv_allowed: set[int] | None) -> DataFrame:
-    lin = read_lineage(spark, root)
-    if lin is None:
-        raise ValueError(f"no committed lineage under {root!r}")
-    from .engine import decode_blocks
-
+                          dv_allowed: set[int]) -> DataFrame:
     # lineage gates by THIS store's manifests (an overlay numbers its
     # own encode runs); DV rows carry GLOBAL ids — a delete can manifest
     # in this store's dir (standalone) or the base's (upsert), so gate
     # by the union of the two
-    own = committed_ids(root)
-    lin = _gate_commits(lin, own)
+    lin = _committed_lineage(spark, root)
+    if lin is None:
+        raise ValueError(f"no committed lineage under {root!r}")
+    from .engine import decode_blocks
+
     if as_of is not None:
         lin = lin.filter(F.col("commit") <= as_of)
     part_keys = lin.select("part_key").distinct()
     blocks = read_blocks(spark, root).drop("pk").join(
         F.broadcast(part_keys), on="part_key", how="left_semi")
-    dv_ids = None if (own is None and dv_allowed is None) \
-        else (own or set()) | (dv_allowed or set())
-    dv = read_deletes(spark, root, as_of=as_of, allowed=dv_ids)
+    dv = read_deletes(spark, root, as_of=as_of,
+                      allowed=committed_ids(root) | dv_allowed)
     return decode_blocks(blocks, schema_ddl, kinds=kinds, shared=shared,
                          columns=columns, missing_ok=missing_ok, deletes=dv)
 
@@ -387,8 +363,7 @@ def read_snapshot(spark: SparkSession, root: str, schema_ddl: str,
     is the ordinary distributed decode path."""
     base_allowed = committed_ids(root)
     overlays = [(c, od) for c, od in _overlay_commits(root)
-                if (as_of is None or c <= as_of)
-                and (base_allowed is None or c in base_allowed)]
+                if (as_of is None or c <= as_of) and c in base_allowed]
     parts: list[DataFrame] = []
     try:
         parts.append(_read_snapshot_single(spark, root, schema_ddl, as_of,
@@ -445,7 +420,6 @@ def upsert_checkpointed(df: DataFrame, root: str,
             .orderBy(F.col(dedup_col).desc())
         df = df.withColumn("_rn", F.row_number().over(w)) \
             .filter(F.col("_rn") == 1).drop("_rn")
-    _ensure_manifests(spark, root)
     commit = next_commit(spark, root)
     kinds = kinds or kinds_for_schema(df.schema)
     key_cols = [opts.group_col, opts.order_col]
@@ -453,24 +427,15 @@ def upsert_checkpointed(df: DataFrame, root: str,
     keys = df.select(*key_cols).distinct()
 
     base_allowed = committed_ids(root)
-    targets = []
-    if (Path(root) / "blocks").exists():
-        targets.append(root)
-    # manifested overlays only: a crashed overlay is invisible to reads,
-    # so marking its rows would be wasted sidecar bytes
-    targets += [od for c, od in _overlay_commits(root)
-                if c < commit and (base_allowed is None or c in base_allowed)]
     rows_replaced = 0
-    for t in targets:
+    for t in _dml_targets(root):
         blocks = read_blocks(spark, t).drop("pk")
         # current VISIBLE state only: a crashed commit's unmanifested
         # vectors don't apply, so their rows must be re-marked here
-        own = committed_ids(t)
-        dv_ids = None if (own is None and base_allowed is None) \
-            else (own or set()) | (base_allowed or set())
         dv = delete_matching_keys(
             blocks, keys, key_kinds,
-            deletes=read_deletes(spark, t, allowed=dv_ids))
+            deletes=read_deletes(spark, t,
+                                 allowed=committed_ids(t) | base_allowed))
         # one manifest covers the whole upsert — written LAST, in the
         # base, so a crash anywhere in this loop (or in the overlay
         # encode below) leaves every partial write invisible
@@ -502,17 +467,11 @@ def delete_where_checkpointed(spark: SparkSession, root: str,
     string zones for eq/prefix, Bloom sidecars for eq (all sound —
     absent stats keep the chunk) — so at 100 TB a selective delete never
     ships non-intersecting chunks' predicate blocks off disk."""
-    _ensure_manifests(spark, root)
     from .deletes import delete_where as _dw
     from .engine import prune_chunks, prune_chunks_bloom, prune_chunks_str
 
     commit = next_commit(spark, root)
-    base_allowed = committed_ids(root)
-    targets = []
-    if (Path(root) / "blocks").exists():
-        targets.append(root)
-    targets += [od for c, od in _overlay_commits(root)
-                if base_allowed is None or c in base_allowed]
+    targets = _dml_targets(root)
     if not targets:
         raise ValueError(f"no committed data under {root!r}")
     rows = 0
