@@ -8,16 +8,19 @@ from __future__ import annotations
 
 import os
 import shutil
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from varint_spark.deletes import delete_where
 from varint_spark.engine import EncodeOptions
 from varint_spark.lineage import (committed_ids, delete_checkpointed,
-                                  encode_checkpointed, read_blocks,
-                                  read_snapshot, upsert_checkpointed,
+                                  encode_checkpointed, next_commit,
+                                  read_blocks, read_lineage, read_snapshot,
+                                  upsert_checkpointed, vacuum,
                                   _write_manifest)
 
 DDL = "event_id bigint, g bigint, v bigint"
@@ -176,3 +179,72 @@ def test_gate_commits_plan_stays_bounded(spark):
         df.filter("commit <= 12"),
         {1, 2, 3, 4, 6, 7}).collect())
     assert got == [0, 1, 2, 3, 4, 6, 7]
+
+
+def test_protocol_questions_launch_no_spark_job(spark, tmp_path):
+    """The next commit id and vacuum's orphan list come from manifests and
+    directory names on the driver: on a store holding an encode, a
+    checkpointed delete and a crashed encode they launch no Spark job."""
+    root = str(tmp_path / "store")
+    opts = EncodeOptions(num_buckets=2, chunk_rows=128, salt_span=512,
+                         group_col="g", order_col="event_id")
+    encode_checkpointed(_batch(spark, 0, 512), root, opts)
+    blocks = read_blocks(spark, root).drop("pk")
+    delete_checkpointed(delete_where(blocks, "v", lo=0, hi=99), root)
+    crashed = encode_checkpointed(_batch(spark, 512, 1024), root, opts)
+    os.remove(f"{root}/commits/{crashed['commit']}")  # crash before marker
+    crashed_keys = sorted(r.part_key for r in read_lineage(spark, root)
+                          .filter(F.col("commit") == crashed["commit"])
+                          .select("part_key").distinct().collect())
+    assert crashed["commit"] == 3 and crashed_keys
+
+    sc = spark.sparkContext
+    group = "protocol-questions"
+    sc.setJobGroup(group, "next_commit and vacuum dry run")
+    try:
+        assert next_commit(root) == crashed["commit"] + 1
+        assert vacuum(spark, root, dry_run=True)["orphans"] == crashed_keys
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_in_progress_manifest_is_ignored(spark, tmp_path, monkeypatch):
+    """A manifest is written under a temporary name and renamed into
+    place. A crash before the rename leaves the full part_key list under
+    that name; committed_ids, resume and read_snapshot must all ignore it."""
+    root = str(tmp_path / "store")
+    opts = EncodeOptions(num_buckets=2, chunk_rows=128, salt_span=512,
+                         group_col="g", order_col="event_id")
+    a, b = _batch(spark, 0, 512), _batch(spark, 512, 1024)
+    ra = encode_checkpointed(a, root, opts)
+
+    real_replace = Path.replace
+
+    def crash_before_manifest_rename(self, target):
+        if Path(target).parent.name == "commits":
+            raise OSError("crash before the manifest rename")
+        return real_replace(self, target)
+
+    monkeypatch.setattr(Path, "replace", crash_before_manifest_rename)
+    with pytest.raises(OSError, match="manifest rename"):
+        encode_checkpointed(b, root, opts)
+    monkeypatch.undo()
+    pending = [f for f in os.listdir(f"{root}/commits") if not f.isdigit()]
+    assert len(pending) == 1
+    b_keys = sorted(r.part_key for r in read_lineage(spark, root)
+                    .filter(F.col("commit") == 2)
+                    .select("part_key").distinct().collect())
+    assert b_keys and (Path(root) / "commits" / pending[0]) \
+        .read_text().split() == b_keys
+
+    assert committed_ids(root) == {ra["commit"]}
+    pd.testing.assert_frame_equal(_pdf(read_snapshot(spark, root, DDL)),
+                                  _pdf(a))
+    # resume re-encodes B's partitions under a fresh id
+    r = encode_checkpointed(a.unionByName(b), root, opts)
+    assert r["commit"] == 3
+    assert r["partitions_skipped"] == ra["partitions_encoded"]
+    assert r["partitions_encoded"] == len(b_keys)
+    pd.testing.assert_frame_equal(_pdf(read_snapshot(spark, root, DDL)),
+                                  _pdf(a.unionByName(b)))

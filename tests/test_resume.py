@@ -133,3 +133,24 @@ def test_vacuum_removes_only_orphans(spark, tdf, tmp_path_factory):
     # idempotent on a clean store
     assert vacuum(spark, root) == {"orphans": [], "removed": 0,
                                "orphan_overlays": []}
+
+
+def test_lineage_reads_the_same_through_pyarrow(spark, tdf, tmp_path_factory):
+    """The lineage is plain parquet under one ``commit=<id>`` directory per
+    commit: pyarrow reads the same rows Spark does (perfbench's lineage
+    checks read it this way)."""
+    import pyarrow.parquet as pq
+
+    root = tmp_path_factory.mktemp("pa")
+    keyed = with_partition_keys(tdf, OPTS)
+    encode_checkpointed(keyed.filter(F.col("_bucket") < 3)
+                        .drop("_bucket", "_salt"), str(root), OPTS)
+    encode_checkpointed(tdf, str(root), OPTS)
+    cols = ["part_key", "column", "digest", "values", "raw_bytes",
+            "encoded_bytes"]
+    got = pq.read_table(root / "lineage").select(cols).to_pandas() \
+        .sort_values(cols[:2], ignore_index=True)
+    want = read_lineage(spark, str(root)).select(cols).toPandas() \
+        .sort_values(cols[:2], ignore_index=True)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, want)

@@ -7,36 +7,42 @@ per partition.
 
 Storage layout (Iceberg-style commit semantics over plain parquet):
 
-    <root>/blocks/pk=<k>/*.parquet   — encoded block rows
-    <root>/lineage/*.parquet         — one row per (part_key, column)
-    <root>/deletes/*.parquet         — deletion-vector appends
-    <root>/overlays/<commit>/        — merge-on-read upsert stores
-    <root>/commits/<id>              — one empty marker per commit
+    <root>/blocks/pk=<k>/*.parquet          — encoded block rows
+    <root>/lineage/commit=<id>/*.parquet    — one row per (part_key, column)
+    <root>/deletes/commit=<id>/*.parquet    — deletion-vector appends
+    <root>/overlays/<commit>/               — merge-on-read upsert stores
+    <root>/commits/<id>                     — manifest: the part_keys it made visible
 
-Every lineage and delete-log row carries the id of the commit that wrote
-it, and every reader sees only rows whose id has a marker under
-``commits/``. A store has ``commits/`` from its first commit on; a store
-without markers has no committed data and reads as empty.
+Every lineage and delete-log file sits under the id of the commit that
+wrote it; a commit is visible once its manifest is under ``commits/``.
+Resume, snapshots, ``vacuum`` and ``next_commit`` read these small files
+on the driver, with no Spark job. A store without manifests has no
+committed data and reads as empty.
 
 Protocol:
 
 1. Pending work = distinct (bucket, salt) keys of the input **anti-joined**
-   against the committed lineage's part_keys (broadcast — lineage is tiny).
+   against the part_keys the manifests list (a broadcast local relation).
 2. Blocks are written with *dynamic partition overwrite*, so re-encoding a
    partition after a crash replaces its directory instead of duplicating
    rows (idempotent because block contents are deterministic —
    tests/test_engine_e2e.py::test_determinism_across_parallelism).
-3. Lineage rows are appended only after the block write commits, and the
-   commit marker only after the lineage. A crash before the marker leaves
-   block dirs and lineage rows that readers ignore; the next run
+3. The lineage rows, collected once from this run's cached blocks, are
+   written from the driver after the block write commits, and the
+   manifest listing their part_keys last. A crash before the manifest
+   leaves block dirs and lineage rows that readers ignore; the next run
    re-encodes those partitions under a fresh id, and ``vacuum`` reclaims
    dirs no run re-covers.
 """
 
 from __future__ import annotations
 
+import functools
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .engine import EncodeOptions, encode_transcripts, lineage_summary, with_partition_keys
@@ -50,14 +56,14 @@ def _part_key_col() -> F.Column:
 
 
 def _read_log(spark: SparkSession, path: Path) -> DataFrame | None:
-    if not path.exists() or not any(path.glob("*.parquet")):
+    if not any(path.glob("commit=*/*.parquet")):
         return None
     return spark.read.parquet(str(path))
 
 
 def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
     """Every lineage row on disk, committed or not (None before the first
-    append) — ``_committed_lineage`` is the view readers use."""
+    append); the manifests say which part_keys are committed."""
     return _read_log(spark, Path(root) / "lineage")
 
 
@@ -67,35 +73,56 @@ def read_blocks(spark: SparkSession, root: str) -> DataFrame:
 
 # --- commit manifests: crash-atomic multi-file commits ---------------------
 #
-# A logical commit touches several files (lineage append, delete-log
-# appends across stores, an overlay encode). The marker file
-# <root>/commits/<id> is written LAST; readers honor only manifested
-# commit ids, so a crash mid-commit leaves every partial write INVISIBLE
-# (the table reads as if the commit never started) rather than
-# half-applied. Ids start at 1. The next operation takes a fresh id
-# (next_commit scans partials too), so crashed ids are never reused;
-# their garbage stays invisible until ``vacuum`` reclaims it. A store
-# gets its commits dir with its first marker, so a store that crashed
-# before its first marker has none and reads as empty.
+# A logical commit writes several files (blocks, lineage, delete-log
+# appends across stores, an overlay encode), each under its commit id.
+# The manifest <root>/commits/<id> comes LAST: the sorted part_keys the
+# commit made visible, one per line (empty for deletes and upserts),
+# written under a hidden name and renamed into place. Readers honor only
+# manifested ids, so a crash mid-commit leaves every partial write
+# INVISIBLE rather than half-applied. Ids start at 1; a crashed commit's
+# id shows in its paths, so next_commit never reuses it, and its garbage
+# stays invisible until ``vacuum`` reclaims it.
 
 
 def committed_ids(root: str) -> set[int]:
     """Manifested commit ids of the store at ``root`` (empty before its
     first commit)."""
-    p = Path(root) / "commits"
-    if not p.exists():
-        return set()
-    return {int(f.name) for f in p.iterdir() if f.name.isdigit()}
+    return {int(f.name) for f in (Path(root) / "commits").glob("*")
+            if f.name.isdigit()}
 
 
-def _write_manifest(root: str, commit: int) -> None:
+def _committed_keys(root: str, as_of: int | None = None) -> list[str]:
+    """The part_keys the manifested commits with id <= ``as_of`` (all when
+    None) made visible, sorted."""
     p = Path(root) / "commits"
-    p.mkdir(parents=True, exist_ok=True)
-    (p / str(commit)).touch()
+    return sorted({k for c in committed_ids(root) if as_of is None or c <= as_of
+                   for k in (p / str(c)).read_text().split()})
+
+
+def _publish(path: Path, write) -> None:
+    """``write`` a hidden sibling of ``path`` (readers skip dot-files),
+    then rename it into place: readers see the whole file or nothing."""
+    path.parent.mkdir(parents=True, exist_ok=True)
+    tmp = path.with_name("." + path.name)
+    write(tmp)
+    tmp.replace(path)
+
+
+def _write_manifest(root: str, commit: int, part_keys=()) -> None:
+    _publish(Path(root) / "commits" / str(commit),
+             lambda t: t.write_text("".join(f"{k}\n" for k in sorted(part_keys))))
+
+
+def _key_relation(spark: SparkSession, keys: list[str],
+                  name: str = "part_key") -> DataFrame:
+    """``keys`` as a broadcast local relation: joining it launches no job."""
+    return F.broadcast(spark.createDataFrame(
+        pa.table({name: pa.array(keys, pa.string())})))
 
 
 def _gate_commits(df: DataFrame, allowed: set[int]) -> DataFrame:
-    """Keep rows whose commit id is in ``allowed`` (the manifested ids).
+    """Keep rows whose commit id is in ``allowed`` (the manifested ids) —
+    on the delete log, a filter on its ``commit=<id>`` partitions.
 
     The predicate is a RANGE over the contiguous manifested prefix 1..hi
     plus an isin() of only the out-of-order tail (ids above the first gap
@@ -113,21 +140,16 @@ def _gate_commits(df: DataFrame, allowed: set[int]) -> DataFrame:
     return df.filter(cond)
 
 
-def _committed_lineage(spark: SparkSession, root: str) -> DataFrame | None:
-    """The lineage rows of manifested commits — the one view resume,
-    snapshot reads and ``vacuum`` trust (None before the first append)."""
-    lin = read_lineage(spark, root)
-    return None if lin is None else _gate_commits(lin, committed_ids(root))
-
-
-def _dml_targets(root: str) -> list[str]:
-    """The stores a table-level DML must touch: the base (once it has
-    blocks) plus every overlay whose creation commit is manifested — a
-    crashed overlay is invisible to reads, so marking its rows would be
+def _stores(root: str, as_of: int | None = None) -> list[str]:
+    """The stores a read or DML at version ``as_of`` (latest when None)
+    covers: the base once it has blocks (a crashed base reads as empty)
+    plus every overlay whose creation commit is manifested and <= as_of —
+    a crashed overlay is invisible to reads, so marking its rows would be
     wasted sidecar bytes."""
     allowed = committed_ids(root)
     base = [root] if (Path(root) / "blocks").exists() else []
-    return base + [od for c, od in _overlay_commits(root) if c in allowed]
+    return base + [od for c, od in _overlay_commits(root)
+                   if c in allowed and (as_of is None or c <= as_of)]
 
 
 def encode_checkpointed(df: DataFrame, root: str,
@@ -147,18 +169,13 @@ def encode_checkpointed(df: DataFrame, root: str,
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     keyed = with_partition_keys(df, opts).withColumn("_part_key", _part_key_col())
-    # resume trusts only MANIFESTED lineage: a crash between the lineage
-    # append and the manifest leaves rows that readers ignore — those
-    # partitions must re-encode, not be skipped into invisibility
-    lin = _committed_lineage(spark, root)
-    skipped = 0
-    if lin is not None:
-        done = lin.select("part_key").distinct()
-        skipped = done.count()
-        keyed = keyed.join(
-            F.broadcast(done.withColumnRenamed("part_key", "_part_key")),
-            on="_part_key", how="left_anti",
-        )
+    # resume skips only MANIFESTED part_keys: a crash before the manifest
+    # leaves lineage rows that readers ignore — those partitions must
+    # re-encode, not be skipped into invisibility
+    done = _committed_keys(root)
+    if done:
+        keyed = keyed.join(_key_relation(spark, done, "_part_key"),
+                           on="_part_key", how="left_anti")
     pending = keyed.drop("_part_key", "_bucket", "_salt")
     blocks = encode_transcripts(pending, opts, kinds=kinds, shared=shared).cache()
     try:
@@ -176,14 +193,16 @@ def encode_checkpointed(df: DataFrame, root: str,
         # could resurrect orphan partitions of a crashed run that the
         # current input no longer covers. Cached bytes == written bytes by
         # the block-determinism invariant, so the lineage is exact.
-        commit = next_commit(spark, root)
-        new_lineage = lineage_summary(blocks).withColumn("commit", F.lit(commit))
-        new_lineage.write.mode("append").parquet(str(Path(root) / "lineage"))
-        done_now = new_lineage.select("part_key").distinct().count()
-        _write_manifest(root, commit)
+        commit = next_commit(root)
+        rows = lineage_summary(blocks).toArrow()
+        if rows.num_rows:
+            _publish(Path(root) / "lineage" / f"commit={commit}" / "part-0.parquet",
+                     lambda t: pq.write_table(rows, t))
+        keys = set(rows["part_key"].to_pylist())
+        _write_manifest(root, commit, keys)
     finally:
         blocks.unpersist()
-    return {"partitions_encoded": done_now, "partitions_skipped": skipped,
+    return {"partitions_encoded": len(keys), "partitions_skipped": len(done),
             "commit": commit}
 
 
@@ -206,21 +225,17 @@ def vacuum(spark: SparkSession, root: str, dry_run: bool = False,
     single-writer; vacuum is a maintenance window op).
 
     Driver-side work is directory-listing sized (one name per partition,
-    the same budget the resume anti-join already spends). Returns
-    ``{"orphans": [...], "removed": n, "orphan_overlays": [...]}``;
+    the same budget the resume anti-join already spends), no Spark job.
+    Returns ``{"orphans": [...], "removed": n, "orphan_overlays": [...]}``;
     ``dry_run`` lists without deleting."""
     import shutil
     from urllib.parse import unquote
 
     # Spark escapes partition values URI-style on disk (":" -> "%3A");
     # lineage part_keys are the logical form — unquote before comparing
-    blocks_dir = Path(root) / "blocks"
     on_disk = {unquote(p.name.split("=", 1)[1]): p
-               for p in blocks_dir.glob("pk=*") if p.is_dir()} \
-        if blocks_dir.exists() else {}
-    lin = _committed_lineage(spark, root)
-    committed = set() if lin is None else {
-        r.part_key for r in lin.select("part_key").distinct().collect()}
+               for p in (Path(root) / "blocks").glob("pk=*") if p.is_dir()}
+    committed = set(_committed_keys(root))
     orphans = sorted(k for k in on_disk if k not in committed)
     if not dry_run:
         for k in orphans:
@@ -243,10 +258,10 @@ def vacuum(spark: SparkSession, root: str, dry_run: bool = False,
 # Commit log + snapshot (time-travel) reads
 #
 # One monotonically increasing commit counter covers BOTH kinds of table
-# change: encode runs (lineage rows tagged `commit`) and row-level deletes
-# (delete-log rows tagged `commit`). A snapshot at version v is therefore
-# exact for append+delete histories: the partitions whose lineage commit
-# is <= v, minus the deletion vectors whose commit is <= v. Re-encoding an
+# change: encode runs (manifests listing part_keys) and row-level deletes
+# (delete-log rows under `commit=<id>`). A snapshot at version v is therefore
+# exact for append+delete histories: the partitions manifested by commits
+# <= v, minus the deletion vectors whose commit is <= v. Re-encoding an
 # EXISTING part_key (dynamic overwrite) physically replaces its bytes, so
 # history before the overwrite is not reconstructable for that partition —
 # the documented Iceberg-without-Iceberg limit of this plain-parquet layout.
@@ -255,28 +270,22 @@ def vacuum(spark: SparkSession, root: str, dry_run: bool = False,
 def _overlay_commits(root: str) -> list[tuple[int, str]]:
     """(commit, path) of the merge-on-read overlay stores under
     <root>/overlays/<commit>, ascending."""
-    p = Path(root) / "overlays"
-    if not p.exists():
-        return []
-    return sorted((int(d.name), str(d)) for d in p.iterdir()
+    return sorted((int(d.name), str(d)) for d in (Path(root) / "overlays").glob("*")
                   if d.is_dir() and d.name.isdigit())
 
 
-def next_commit(spark: SparkSession, root: str) -> int:
-    """1 + the highest commit across the lineage, the delete log, and any
-    overlay stores (their creation ids and delete logs) — driver work is
-    a few metadata-sized maxes."""
-    mx = 0
-    lin = read_lineage(spark, root)
-    if lin is not None:
-        mx = lin.agg(F.max("commit")).first()[0] or 0
-    for d in [root] + [od for _, od in _overlay_commits(root)]:
-        log = read_delete_log(spark, d)
-        if log is not None:
-            mx = max(mx, log.agg(F.max("commit")).first()[0] or 0)
-    for c, _ in _overlay_commits(root):
-        mx = max(mx, c)
-    return mx + 1
+def next_commit(root: str) -> int:
+    """1 + the highest commit id in any path of the store: manifests,
+    ``lineage/commit=<id>``, ``deletes/commit=<id>`` of the base and every
+    overlay, and the overlay stores' creation ids. A crashed commit's
+    writes carry its id too, so crashed ids are never reused. A directory
+    listing on the driver; no Spark job."""
+    overlays = _overlay_commits(root)
+    ids = committed_ids(root) | {c for c, _ in overlays}
+    for d in [Path(root) / "lineage"] + [Path(s) / "deletes" for s in
+                                         [root] + [od for _, od in overlays]]:
+        ids |= {int(p.name.removeprefix("commit=")) for p in d.glob("commit=*")}
+    return max(ids, default=0) + 1
 
 
 def read_delete_log(spark: SparkSession, root: str) -> DataFrame | None:
@@ -292,16 +301,17 @@ def delete_checkpointed(dv: DataFrame, root: str,
     pass ``write_manifest=False``, manifesting once at the end).
     Append-only, manifest written last — a crash mid-append leaves rows
     readers ignore (unmanifested id), never a half-applied delete."""
-    spark = dv.sparkSession
     if commit is None:
-        commit = next_commit(spark, root)
-    tagged = dv.withColumn("commit", F.lit(commit))
-    tagged.write.mode("append").parquet(str(Path(root) / "deletes"))
-    stats = tagged.agg(F.count("*"), F.sum("n_deleted")).first()
+        commit = next_commit(root)
+    out = Path(root) / "deletes" / f"commit={commit}"
+    dv.write.mode("append").parquet(str(out))
+    # the stats come from the metadata-sized files just written: an
+    # aggregate over ``dv`` would re-run the whole predicate pass
+    n_deleted = pq.read_table(out, columns=["n_deleted"])["n_deleted"]
     if write_manifest:
         _write_manifest(root, commit)
-    return {"commit": commit, "chunks": stats[0],
-            "rows_deleted": stats[1] or 0}
+    return {"commit": commit, "chunks": len(n_deleted),
+            "rows_deleted": pc.sum(n_deleted).as_py() or 0}
 
 
 def read_deletes(spark: SparkSession, root: str,
@@ -328,20 +338,15 @@ def _read_snapshot_single(spark: SparkSession, root: str, schema_ddl: str,
                           as_of: int | None, kinds, shared, columns,
                           missing_ok: bool,
                           dv_allowed: set[int]) -> DataFrame:
-    # lineage gates by THIS store's manifests (an overlay numbers its
+    # part_keys come from THIS store's manifests (an overlay numbers its
     # own encode runs); DV rows carry GLOBAL ids — a delete can manifest
     # in this store's dir (standalone) or the base's (upsert), so gate
     # by the union of the two
-    lin = _committed_lineage(spark, root)
-    if lin is None:
-        raise ValueError(f"no committed lineage under {root!r}")
     from .engine import decode_blocks
 
-    if as_of is not None:
-        lin = lin.filter(F.col("commit") <= as_of)
-    part_keys = lin.select("part_key").distinct()
     blocks = read_blocks(spark, root).drop("pk").join(
-        F.broadcast(part_keys), on="part_key", how="left_semi")
+        _key_relation(spark, _committed_keys(root, as_of)),
+        on="part_key", how="left_semi")
     dv = read_deletes(spark, root, as_of=as_of,
                       allowed=committed_ids(root) | dv_allowed)
     return decode_blocks(blocks, schema_ddl, kinds=kinds, shared=shared,
@@ -359,27 +364,16 @@ def read_snapshot(spark: SparkSession, root: str, schema_ddl: str,
     created at commit <= as_of (each read under the same version — an
     overlay row upserted over again is DV-masked by the later commit,
     so last-writer-wins per key holds at every version). The partition
-    filters are broadcast semi-joins against metadata; everything else
-    is the ordinary distributed decode path."""
+    filters are broadcast semi-joins against the manifests' part_keys;
+    everything else is the ordinary distributed decode path."""
+    stores = _stores(root, as_of)
+    if not stores:  # no blocks and no overlay: nothing was ever written
+        raise ValueError(f"no committed lineage under {root!r}")
     base_allowed = committed_ids(root)
-    overlays = [(c, od) for c, od in _overlay_commits(root)
-                if (as_of is None or c <= as_of) and c in base_allowed]
-    parts: list[DataFrame] = []
-    try:
-        parts.append(_read_snapshot_single(spark, root, schema_ddl, as_of,
-                                           kinds, shared, columns, missing_ok,
-                                           base_allowed))
-    except ValueError:
-        if not overlays:  # nothing at all under this root
-            raise
-    for _, od in overlays:
-        parts.append(_read_snapshot_single(spark, od, schema_ddl, as_of,
-                                           kinds, shared, columns, missing_ok,
-                                           base_allowed))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return functools.reduce(DataFrame.unionByName, [
+        _read_snapshot_single(spark, s, schema_ddl, as_of, kinds, shared,
+                              columns, missing_ok, base_allowed)
+        for s in stores])
 
 
 def upsert_checkpointed(df: DataFrame, root: str,
@@ -420,7 +414,7 @@ def upsert_checkpointed(df: DataFrame, root: str,
             .orderBy(F.col(dedup_col).desc())
         df = df.withColumn("_rn", F.row_number().over(w)) \
             .filter(F.col("_rn") == 1).drop("_rn")
-    commit = next_commit(spark, root)
+    commit = next_commit(root)
     kinds = kinds or kinds_for_schema(df.schema)
     key_cols = [opts.group_col, opts.order_col]
     key_kinds = {c: kinds[c] for c in key_cols}
@@ -428,7 +422,7 @@ def upsert_checkpointed(df: DataFrame, root: str,
 
     base_allowed = committed_ids(root)
     rows_replaced = 0
-    for t in _dml_targets(root):
+    for t in _stores(root):
         blocks = read_blocks(spark, t).drop("pk")
         # current VISIBLE state only: a crashed commit's unmanifested
         # vectors don't apply, so their rows must be re-marked here
@@ -470,8 +464,8 @@ def delete_where_checkpointed(spark: SparkSession, root: str,
     from .deletes import delete_where as _dw
     from .engine import prune_chunks, prune_chunks_bloom, prune_chunks_str
 
-    commit = next_commit(spark, root)
-    targets = _dml_targets(root)
+    commit = next_commit(root)
+    targets = _stores(root)
     if not targets:
         raise ValueError(f"no committed data under {root!r}")
     rows = 0
