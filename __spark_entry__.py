@@ -473,21 +473,21 @@ def _q_str_like_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_str_zone_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full two-stage string predicate: chunk-level zone-map pruning
-    on the (min_str, max_str) metadata columns (engine.prune_chunks_str —
+    on the (min_str, max_str) metadata columns (engine.prune_chunks prefix= —
     a metadata-only Spark filter that at 100 TB reaches the blocks scan's
     parquet row-group stats) THEN the encoded-form dictionary evaluation
     inside surviving chunks (decode_blocks_where prefix=). Grouping by
     source makes chunks source-homogeneous, so the prune stage drops
     ~9/10 of the chunks before any payload ships."""
     from varint_spark.engine import (EncodeOptions, decode_blocks_where,
-                                     encode_transcripts, prune_chunks_str)
+                                     encode_transcripts, prune_chunks)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "source", "text")
     opts = EncodeOptions(num_buckets=8, chunk_rows=2048, salt_span=2**40,
                          group_col="source", order_col="doc_id")
-    blocks = prune_chunks_str(encode_transcripts(docs, opts).cache(),
-                              "source", prefix="src1")
+    blocks = prune_chunks(encode_transcripts(docs, opts).cache(),
+                          "source", prefix="src1")
     return decode_blocks_where(blocks, "doc_id bigint, source string",
                                "source", None, columns=["doc_id", "source"],
                                prefix="src1")

@@ -175,6 +175,27 @@ def test_prune_chunks_null_stats_is_noop(spark):
         assert kept == n_all, col
 
 
+def test_prune_chunks_sound_across_kinds_and_validates(spark):
+    """One prune_chunks for integer and string zone maps: bounds on a
+    string column and eq on an integer column meet NULL zones and keep
+    every chunk; mixed predicates raise like the readers do."""
+    from varint_spark.engine import prune_chunks
+    rows = [(i, f"s{i % 7}") for i in range(1, 2001)]
+    df = spark.createDataFrame(rows, "id long, s string")
+    blocks = encode_transcripts(df, EncodeOptions(
+        num_buckets=4, chunk_rows=256, salt_span=1024,
+        group_col="id", order_col="id")).cache()
+    n_all = blocks.select("part_key", "chunk_id").distinct().count()
+    for col, kw in [("s", dict(lo=0)), ("id", dict(eq="s3"))]:
+        kept = prune_chunks(blocks, col, **kw).select(
+            "part_key", "chunk_id").distinct().count()
+        assert kept == n_all, (col, kw)
+    with pytest.raises(ValueError, match="not both"):
+        prune_chunks(blocks, "s", eq="s3", lo=0)
+    with pytest.raises(ValueError, match="at most one"):
+        prune_chunks(blocks, "s", eq="s3", prefix="s")
+
+
 def test_zone_map_string_pruning(spark):
     """prune_chunks_str drops chunks whose [min_str, max_str] can't hold
     the probe; non-ASCII / >64-char values store NULL stats and survive

@@ -37,6 +37,23 @@ def test_column_pruned_decode_pushes_filter_into_scan(spark, tmp_path_factory):
     assert "In(column, [conv_id,ts])" in plan or "column IN" in plan, plan
 
 
+def test_where_decode_pushes_column_filter_into_scan(spark, tmp_path_factory):
+    """Same pin for the predicate read: decode_blocks_where shares
+    decode_blocks' projection, so its column IN filter reaches the scan."""
+    from varint_spark.engine import decode_blocks_where
+
+    d = str(tmp_path_factory.mktemp("blocks_pq_where"))
+    df = transcripts.generate_spark(spark, n_conversations=50, n_hot=0)
+    encode_transcripts(df, OPTS).write.mode("overwrite").parquet(d)
+    blocks = spark.read.parquet(d)
+    dec = decode_blocks_where(blocks, transcripts.TRANSCRIPT_DDL, "turn_idx",
+                              lo=3, columns=["conv_id", "turn_idx"])
+    plan = _plan(dec)
+    scan_lines = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert scan_lines and any("column" in ln for ln in scan_lines), plan
+    assert "In(column, [conv_id,turn_idx])" in plan or "column IN" in plan, plan
+
+
 def test_roundtrip_plan_has_no_python_row_udfs(spark):
     """The hot path is Arrow-native grouped maps — a row-at-a-time
     BatchEvalPython stage appearing anywhere in the roundtrip plan would

@@ -105,3 +105,31 @@ def test_delete_where_on_shared_dict_column(spark):
     left = want.orderBy("conv_id", "turn_idx").toPandas().reset_index(drop=True)
     right = got.orderBy("conv_id", "turn_idx").toPandas().reset_index(drop=True)
     pd.testing.assert_frame_equal(left, right)
+
+
+def test_decode_where_on_shared_dict_column(spark):
+    """decode_blocks_where reads a shared-table store: the eq/prefix
+    predicate resolves codes through the broadcast dictionary, and the
+    result equals decode_blocks followed by the same filter."""
+    from varint_spark.engine import decode_blocks_where
+
+    df = transcripts.generate_spark(spark, n_conversations=150, n_hot=1,
+                                    hot_turns=3000)
+    df.cache().count()
+    bc = spark.sparkContext.broadcast(build_shared_tables(df))
+    blocks = encode_transcripts(df, OPTS, shared=bc).cache()
+    role_codecs = {r.codec for r in blocks.filter("column = 'role'")
+                   .select("codec").distinct().collect()}
+    assert any("shared" in c for c in role_codecs)  # the path under test
+
+    full = decode_blocks(blocks, transcripts.TRANSCRIPT_DDL, shared=bc)
+    for kw, cond in [(dict(eq="assistant"), F.col("role") == "assistant"),
+                     (dict(prefix="us"), F.col("role").startswith("us"))]:
+        got = decode_blocks_where(blocks, transcripts.TRANSCRIPT_DDL, "role",
+                                  None, shared=bc, **kw)
+        want = full.filter(cond)
+        left = want.orderBy("conv_id", "turn_idx").toPandas()
+        right = got.orderBy("conv_id", "turn_idx").toPandas()
+        assert len(left) > 0, kw
+        pd.testing.assert_frame_equal(left.reset_index(drop=True),
+                                      right.reset_index(drop=True))

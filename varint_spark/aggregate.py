@@ -258,7 +258,7 @@ def approx_distinct_blocks(blocks: DataFrame,
                            columns: list[str]) -> DataFrame:
     """Approximate COUNT(DISTINCT) per column from the per-chunk HLL
     sidecars (``EncodeOptions.hll_cols``) — works on ANY chunk subset
-    (compose with prune_chunks/_str/_bloom/topk_prune first), never
+    (compose with prune_chunks/prune_chunks_bloom/topk_prune first), never
     decodes a payload. Two-stage merge, the bitmap-index shape: each
     partition folds its sketches in ``mapInArrow`` (one partial row per
     (partition, column)), then one ``applyInArrow`` per column folds the

@@ -1,6 +1,6 @@
 """Per-chunk Bloom-filter sidecars for equality pruning.
 
-Zone maps (``prune_chunks`` / ``prune_chunks_str``) prune only when
+Zone maps (``prune_chunks``, integer and string) prune only when
 chunks are value-clustered; a high-cardinality column scattered across
 chunks has min/max spans that cover everything. A k-hash Bloom bitset
 per (chunk, column) prunes regardless of clustering (reference

@@ -16,6 +16,8 @@ the blocks/rows a predicate selects ("decode only needed blocks",
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 from . import bitpack, blocks, delta, leb128, zigzag
@@ -502,3 +504,50 @@ def str_filter_like(block: bytes | memoryview, pattern: str,
         block, shared_col, on_dict,
         lambda arr: pc.match_substring_regex(
             arr, "^" + like_pattern_to_regex(pattern) + "$"))
+
+
+# ---- the one predicate surface (reads and deletes) --------------------------
+
+_STR_FILTERS = {"eq": str_filter_eq, "prefix": str_filter_prefix,
+                "isin": str_filter_in, "like": str_filter_like}
+
+
+def _str_mask(fn, arg, block, shared_col=None) -> np.ndarray:
+    return fn(block, arg, shared_col)
+
+
+def _between_mask(lo, hi, block, shared_col=None) -> np.ndarray:
+    return filter_between(block, lo, hi)
+
+
+def predicate_mask(kind: str, lo: int | None = None, hi: int | None = None,
+                   eq: str | None = None, prefix: str | None = None,
+                   isin=None, like: str | None = None, *, column: str):
+    """Validate one encoded-form predicate against the filter column's
+    ``kind`` and return a picklable ``mask(block, shared_col) -> bool
+    ndarray`` — the single place a predicate becomes a row mask, for
+    ``engine.decode_blocks_where`` and ``deletes.delete_where`` alike.
+
+    ``lo``/``hi`` (either optional, stored int64 domain — timestamps in
+    epoch-µs) need an integer/timestamp column; ``eq``/``prefix``/``isin``/
+    ``like`` (at most one, never with bounds) need a string column. No
+    predicate at all is an all-True mask over an integer column. Numeric
+    bounds against f64/str/f32list blocks would compare stored bit
+    patterns or corpora, silently meaningless, hence the kind checks."""
+    preds = {"eq": eq, "prefix": prefix, "isin": isin, "like": like}
+    given = [k for k, v in preds.items() if v is not None]
+    if len(given) > 1:
+        raise ValueError(f"pass at most one string predicate, got {given}")
+    if given:
+        p = given[0]
+        if kind != "str":
+            raise ValueError(f"{p}= needs a string column (kind='str'); "
+                             f"{column!r} is {kind!r}")
+        if lo is not None or hi is not None:
+            raise ValueError(f"pass either {p}= or lo/hi bounds, not both")
+        arg = list(isin) if p == "isin" else preds[p]
+        return functools.partial(_str_mask, _STR_FILTERS[p], arg)
+    if kind not in ("int32", "int64", "ts", "tsntz"):
+        raise ValueError("encoded-form predicates need an integer/timestamp "
+                         f"column; {column!r} is {kind!r}")
+    return functools.partial(_between_mask, lo, hi)

@@ -53,47 +53,23 @@ def delete_where(blocks: DataFrame, filter_col: str, kind: str = "int64",
     chunk that has at least one match; untouched chunks emit nothing, so
     the DV table size tracks the delete's selectivity, not the store's.
 
-    Compose with ``prune_chunks``/``prune_chunks_str``/
-    ``prune_chunks_bloom`` first to skip non-matching chunks at the
+    Compose with ``prune_chunks`` (zone maps: lo/hi, eq/prefix) and
+    ``prune_chunks_bloom`` (eq) first to skip non-matching chunks at the
     metadata level — a pruned chunk's block bytes never leave disk."""
-    str_preds = {"eq": eq, "prefix": prefix, "isin": isin, "like": like}
-    given = [k for k, v in str_preds.items() if v is not None]
-    if len(given) > 1:
-        raise ValueError(f"pass at most one string predicate, got {given}")
-    if given and (lo is not None or hi is not None):
-        raise ValueError(f"pass either {given[0]}= or lo/hi bounds, not both")
-    if not given and lo is None and hi is None:
+    if all(v is None for v in (lo, hi, eq, prefix, isin, like)):
         raise ValueError("delete_where needs a predicate (lo/hi or a "
                          "string predicate) — a full-table delete is "
                          "drop, not delete")
-    # same kind discipline as decode_blocks_where: numeric bounds against
-    # a string/float block would compare encoded garbage silently
-    if given and kind != "str":
-        raise ValueError(f"{given[0]}= needs kind='str'; got {kind!r}")
-    if not given and kind not in ("int32", "int64", "ts", "tsntz"):
-        raise ValueError("lo/hi bounds need an integer/timestamp kind; "
-                         f"got {kind!r}")
-    isin_l = list(isin) if isin is not None else None
-    kinds = {filter_col: kind}
+    mask = random_access.predicate_mask(kind, lo, hi, eq, prefix, isin, like,
+                                        column=filter_col)
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        shared_cols = _resolve_shared(shared, kinds) or {}
-        sc = shared_cols.get(filter_col)
+        sc = (_resolve_shared(shared, {filter_col: kind}) or {}).get(filter_col)
         for batch in it:
             pks, cids, dvs, ns = [], [], [], []
             blks = batch.column("block").to_pylist()
             for i, blk in enumerate(blks):
-                if eq is not None:
-                    mask = random_access.str_filter_eq(blk, eq, sc)
-                elif prefix is not None:
-                    mask = random_access.str_filter_prefix(blk, prefix, sc)
-                elif isin_l is not None:
-                    mask = random_access.str_filter_in(blk, isin_l, sc)
-                elif like is not None:
-                    mask = random_access.str_filter_like(blk, like, sc)
-                else:
-                    mask = random_access.filter_between(blk, lo, hi)
-                offs = np.flatnonzero(mask)
+                offs = np.flatnonzero(mask(blk, sc))
                 if len(offs) == 0:
                     continue
                 pks.append(batch.column("part_key")[i].as_py())

@@ -38,7 +38,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .codecs import leb128, zigzag
+from .codecs import bitmap, leb128, random_access, zigzag
+from .codecs.blocks import INT_CODECS
 from .selector import codec_name_of, decode_column, encode_column
 
 # Logical kinds: every column maps to an int64 plane or a utf8 plane before
@@ -242,7 +243,7 @@ def _encode_chunk_rows(columns: dict[str, pa.Array], n: int, part_key: str,
             lens = pa.compute.binary_length(arr)
             raw_bytes = int(pa.compute.sum(lens).as_py() or 0) + 4 * n  # data + 4B offsets
             vb = raw_bytes  # reference has no string codecs; floor = raw
-            if n and arr.null_count < n:  # string zone stats (prune_chunks_str)
+            if n and arr.null_count < n:  # string zone stats (prune_chunks eq=/prefix=)
                 mm = pa.compute.min_max(arr)
                 smn = _zone_str(mm["min"].as_py(), is_min=True)
                 smx = _zone_str(mm["max"].as_py(), is_min=False)
@@ -398,7 +399,15 @@ _NULL_OUTPUT_TYPES = {
 
 
 def make_decode_udf(kinds: dict[str, str], out_ddl_cols: list[str], shared=None,
-                    verify: bool = False, missing_ok: bool = False):
+                    verify: bool = False, missing_ok: bool = False,
+                    where=None):
+    """Grouped-map decode of one chunk's block rows. ``where``: optional
+    ``(filter_col, mask)`` with ``mask`` from
+    :func:`varint_spark.codecs.random_access.predicate_mask` — the row
+    mask is evaluated on the filter column's ENCODED block, integer
+    columns are read through ``take_mask`` (only the covering ranges
+    decode) and the rest decode then filter. A ``_dv`` column riding the
+    group (``deletes.join_dv``) drops its offsets either way."""
     def decode_group(key, table):
         shared_cols = _resolve_shared(shared, kinds) or {}
         names = table.column("column").to_pylist()
@@ -416,21 +425,37 @@ def make_decode_udf(kinds: dict[str, str], out_ddl_cols: list[str], shared=None,
                         f"(stored {digests[col][:12]}…, got {got[:12]}…)"
                     )
         n = int(table.column("count")[0].as_py())
-        arrays = [
-            # schema evolution: a column added after these blocks were
-            # written decodes as typed nulls (missing_ok=True)
-            pa.nulls(n, _NULL_OUTPUT_TYPES[kinds[col]])
-            if missing_ok and col not in by_col
-            else _decoded_to_output(decode_column(by_col[col],
-                                                  shared_cols.get(col)),
-                                    kinds[col])
-            for col in out_ddl_cols
-        ]
-        if "_dv" in table.column_names:  # deletion vector rides the join
-            from .deletes import apply_dv_mask
-            dv = table.column("_dv")[0].as_py()
-            arrays = apply_dv_mask(arrays, n, dv)
-        return pa.Table.from_arrays(arrays, names=out_ddl_cols)
+        keep = None
+        if where is not None:
+            # the predicate runs against the ENCODED block — packed-offset
+            # compares for FOR, header-bound 128-block pruning for BP128,
+            # sorted-dictionary code ranges for DICT_STR(_SHARED)
+            filter_col, mask = where
+            keep = mask(by_col[filter_col], shared_cols.get(filter_col))
+        dv = table.column("_dv")[0].as_py() if "_dv" in table.column_names else None
+        if dv is not None:  # deletion vector rides the join
+            keep = np.ones(n, dtype=bool) if keep is None else keep.copy()
+            keep[bitmap.decode(dv)] = False
+        pakeep = None if keep is None else pa.array(keep)
+
+        def column(col):
+            if missing_ok and col not in by_col:
+                # schema evolution: a column added after these blocks were
+                # written decodes as typed nulls (missing_ok=True)
+                return pa.nulls(n if keep is None else int(keep.sum()),
+                                _NULL_OUTPUT_TYPES[kinds[col]])
+            blk = by_col[col]
+            if where is not None and blk[0] in INT_CODECS:
+                # selected rows only: contiguous runs -> partial get_range
+                arr = pa.array(random_access.take_mask(blk, keep), type=pa.int64())
+            else:  # strings / nullable / matrix / no predicate: decode
+                arr = decode_column(blk, shared_cols.get(col))
+                if pakeep is not None:
+                    arr = arr.filter(pakeep)
+            return _decoded_to_output(arr, kinds[col])
+
+        return pa.Table.from_arrays([column(c) for c in out_ddl_cols],
+                                    names=out_ddl_cols)
 
     return decode_group
 
@@ -473,70 +498,33 @@ def decode_blocks(blocks: DataFrame, schema_ddl: str, kinds: dict[str, str] | No
     DV-named row offsets are dropped executor-side inside the decode UDF;
     the join is chunk-keyed against a metadata-sized table (AQE
     broadcasts it), so deleted rows are never materialized anywhere."""
+    return _decode(blocks, schema_ddl, kinds, columns, deletes, shared=shared,
+                   verify=verify, missing_ok=missing_ok)
+
+
+def _decode(blocks: DataFrame, schema_ddl: str, kinds, columns, deletes,
+            where: tuple[str, dict] | None = None, **udf_opts) -> DataFrame:
+    """Shared body of decode_blocks / decode_blocks_where: column
+    projection, optional predicate ``(filter_col, predicate kwargs)``,
+    deletion-vector join, one grouped-map decode per chunk."""
     fields = [f.strip() for f in schema_ddl.split(",")]
     if columns:
         fields = [f for f in fields if f.split()[0] in set(columns)]
         schema_ddl = ", ".join(fields)
         blocks = blocks.filter(F.col("column").isin(list(columns)))
+    cols = [f.split()[0] for f in fields]
+    kinds = kinds or kinds_for_ddl(schema_ddl)
+    if where is not None:
+        filter_col, preds = where
+        if filter_col not in cols:
+            raise ValueError(f"filter_col {filter_col!r} must be among {cols}")
+        where = (filter_col, random_access.predicate_mask(
+            kinds.get(filter_col), column=filter_col, **preds))
     if deletes is not None:
         from .deletes import join_dv
         blocks = join_dv(blocks, deletes)
-    cols = [f.split()[0] for f in fields]
-    kinds = kinds or kinds_for_ddl(schema_ddl)
-    fn = make_decode_udf(kinds, cols, shared, verify, missing_ok)
+    fn = make_decode_udf(kinds, cols, where=where, **udf_opts)
     return blocks.groupBy("part_key", "chunk_id").applyInArrow(fn, schema_ddl)
-
-
-def make_decode_where_udf(kinds: dict[str, str], out_cols: list[str],
-                          filter_col: str, lo: int | None, hi: int | None = None,
-                          eq: str | None = None, prefix: str | None = None,
-                          isin: list[str] | None = None,
-                          like: str | None = None):
-    from .codecs import random_access
-    from .codecs.blocks import INT_CODECS
-
-    def decode_group(key, table):
-        names = table.column("column").to_pylist()
-        blks = table.column("block").to_pylist()
-        by_col = dict(zip(names, blks))
-        # the predicate runs against the ENCODED block — packed-offset
-        # compares for FOR, header-bound 128-block pruning for BP128,
-        # sorted-dictionary find (eq) / lower-upper-bound code range
-        # (prefix) / coalesced multi-find (isin) for DICT_STR; surviving
-        # chunks are never fully decoded
-        if eq is not None:
-            mask = random_access.str_filter_eq(by_col[filter_col], eq)
-        elif prefix is not None:
-            mask = random_access.str_filter_prefix(by_col[filter_col], prefix)
-        elif isin is not None:
-            mask = random_access.str_filter_in(by_col[filter_col], isin)
-        elif like is not None:
-            mask = random_access.str_filter_like(by_col[filter_col], like)
-        else:
-            mask = random_access.filter_between(by_col[filter_col], lo, hi)
-        if "_dv" in table.column_names:  # deletion vector rides the join
-            dv = table.column("_dv")[0].as_py()
-            if dv is not None:
-                from .codecs import bitmap as _bm
-                mask = mask.copy()
-                offs = _bm.decode(dv)
-                mask[offs] = False
-        pamask = None
-        arrays = []
-        for col in out_cols:
-            blk = by_col[col]
-            if blk[0] in INT_CODECS:
-                # selected rows only: contiguous runs -> partial get_range
-                arr = pa.array(random_access.take_mask(blk, mask),
-                               type=pa.int64())
-            else:  # strings / nullable / matrix: decode then filter
-                if pamask is None:
-                    pamask = pa.array(mask)
-                arr = decode_column(blk).filter(pamask)
-            arrays.append(_decoded_to_output(arr, kinds[col]))
-        return pa.Table.from_arrays(arrays, names=out_cols)
-
-    return decode_group
 
 
 def decode_blocks_where(blocks: DataFrame, schema_ddl: str, filter_col: str,
@@ -547,48 +535,24 @@ def decode_blocks_where(blocks: DataFrame, schema_ddl: str, filter_col: str,
                         prefix: str | None = None,
                         isin: list[str] | None = None,
                         like: str | None = None,
-                        deletes: DataFrame | None = None) -> DataFrame:
-    """decode_blocks with ``lo <= filter_col <= hi`` (either bound
-    optional) pushed INTO the encoded form: the predicate is evaluated
-    against each chunk's encoded block
-    (:func:`varint_spark.codecs.random_access.filter_between`) and only
+                        deletes: DataFrame | None = None,
+                        shared=None) -> DataFrame:
+    """The predicate form of :func:`decode_blocks` (same projection,
+    ``deletes`` and ``shared`` handling): ``lo <= filter_col <= hi``
+    (either bound optional, stored int64 domain — timestamps in epoch-µs)
+    or one string predicate ``eq``/``prefix``/``isin``/``like`` is
+    evaluated against each chunk's ENCODED block
+    (:func:`varint_spark.codecs.random_access.predicate_mask`) and only
     the passing rows' values are materialized (``take_mask`` decodes the
-    covering ranges only). Combine with :func:`prune_chunks` for the
+    covering ranges only). ``shared``: the broadcast tables the store was
+    encoded with, needed when the filter or an output column is a
+    shared-table block. Combine with :func:`prune_chunks` for the
     zone-map stage first — this is the within-chunk stage of the
     reference's partial-decode surface (decode only needed blocks,
-    varintFORDecodeBlock src/varintFOR.c:597). Bounds are in the stored
-    int64 domain (timestamps: epoch-µs)."""
-    fields = [f.strip() for f in schema_ddl.split(",")]
-    if columns:
-        fields = [f for f in fields if f.split()[0] in set(columns)]
-        schema_ddl = ", ".join(fields)
-        blocks = blocks.filter(F.col("column").isin(list(columns)))
-    cols = [f.split()[0] for f in fields]
-    if filter_col not in cols:
-        raise ValueError(f"filter_col {filter_col!r} must be among {cols}")
-    kinds = kinds or kinds_for_ddl(schema_ddl)
-    str_preds = {"eq": eq, "prefix": prefix, "isin": isin, "like": like}
-    given = [k for k, v in str_preds.items() if v is not None]
-    if len(given) > 1:
-        raise ValueError(f"pass at most one string predicate, got {given}")
-    if given:
-        if kinds.get(filter_col) != "str":
-            raise ValueError(f"{given[0]}= needs a string column; "
-                             f"{filter_col!r} is {kinds.get(filter_col)!r}")
-        if lo is not None or hi is not None:
-            raise ValueError(f"pass either {given[0]}= or lo/hi bounds, not both")
-    elif kinds.get(filter_col) not in ("int32", "int64", "ts", "tsntz"):
-        # f64/str/f32list blocks store bit patterns / corpora — an integer
-        # compare against them would be silently meaningless
-        raise ValueError(
-            f"encoded-form predicates need an integer/timestamp column; "
-            f"{filter_col!r} is {kinds.get(filter_col)!r}")
-    if deletes is not None:
-        from .deletes import join_dv
-        blocks = join_dv(blocks, deletes)
-    fn = make_decode_where_udf(kinds, cols, filter_col, lo, hi, eq, prefix,
-                               list(isin) if isin is not None else None, like)
-    return blocks.groupBy("part_key", "chunk_id").applyInArrow(fn, schema_ddl)
+    varintFORDecodeBlock src/varintFOR.c:597)."""
+    preds = dict(lo=lo, hi=hi, eq=eq, prefix=prefix, isin=isin, like=like)
+    return _decode(blocks, schema_ddl, kinds, columns, deletes,
+                   where=(filter_col, preds), shared=shared)
 
 
 def compact_blocks(blocks: DataFrame, schema_ddl: str, target_chunk_rows: int,
@@ -705,23 +669,51 @@ def lineage_summary(blocks: DataFrame) -> DataFrame:
     )
 
 
-def prune_chunks(blocks: DataFrame, column: str, lo=None, hi=None) -> DataFrame:
-    """Zone-map chunk pruning: keep only the chunks whose [min_val, max_val]
-    for ``column`` intersects [lo, hi] — the block-store analog of parquet
+def prune_chunks(blocks: DataFrame, column: str, lo=None, hi=None,
+                 eq: str | None = None, prefix: str | None = None) -> DataFrame:
+    """Zone-map chunk pruning: keep only the chunks of ``column`` whose
+    zone can hold a matching row — the block-store analog of parquet
     row-group statistics pruning (reference analog: header-only metadata
-    reads, varintBP128GetCount src/varintBP128.c:824). Rows with NULL
-    zone stats (string columns) are kept. Follow with decode_blocks +
-    an exact filter.
+    reads, varintBP128GetCount src/varintBP128.c:824). Follow with
+    :func:`decode_blocks_where` (or decode_blocks + an exact filter).
 
-    Timestamps: pass lo/hi as epoch-µs ints (the stored zone domain)."""
+    * ``lo``/``hi``: [min_val, max_val] must intersect [lo, hi]
+      (timestamps: epoch-µs ints, the stored zone domain).
+    * ``eq``/``prefix`` (at most one, never with bounds): [min_str,
+      max_str] must hold ``eq`` / a string starting with ``prefix``. The
+      stats are plain parquet columns, so at 100 TB the filter reaches
+      the blocks scan's row-group statistics. String stats exist for
+      ASCII values ≤64 chars (``_zone_str``); a truncated min is a lower
+      bound by construction, so every comparison stays conservative.
+
+    NULL zone stats (f64 / string columns carry no min_val/max_val, int
+    columns no min_str/max_str) and non-ASCII probes keep the chunk —
+    pruning is always sound, never required."""
+    if eq is not None and prefix is not None:
+        raise ValueError("pass at most one of eq= / prefix=")
+    probe = eq if eq is not None else prefix
+    if probe is not None and (lo is not None or hi is not None):
+        raise ValueError("pass either eq=/prefix= or lo/hi bounds, not both")
     cond = F.col("column") == column
-    # NULL zone stats (f64 / string columns never carry min/max) must be
-    # non-prunable: without the isNull() escape the NULL comparison drops
-    # every such chunk and the semi-join silently returns zero rows.
+    # without the isNull() escapes the NULL comparison drops every
+    # stat-less chunk and the semi-join silently returns zero rows
     if lo is not None:
         cond = cond & ((F.col("max_val") >= F.lit(int(lo))) | F.col("max_val").isNull())
     if hi is not None:
         cond = cond & ((F.col("min_val") <= F.lit(int(hi))) | F.col("min_val").isNull())
+    if eq is not None and eq.isascii():
+        cond = cond & ((F.col("min_str") <= F.lit(eq)) | F.col("min_str").isNull()) \
+                    & ((F.col("max_str") >= F.lit(eq)) | F.col("max_str").isNull())
+    elif prefix and prefix.isascii():
+        upper = _ascii_increment(prefix)
+        cond = cond & ((F.col("max_str") >= F.lit(prefix)) | F.col("max_str").isNull())
+        if upper is not None:
+            cond = cond & ((F.col("min_str") < F.lit(upper)) | F.col("min_str").isNull())
+    return _keep_chunks(blocks, cond)
+
+
+def _keep_chunks(blocks: DataFrame, cond) -> DataFrame:
+    """Every block row of the chunks with a ``cond``-matching metadata row."""
     surviving = blocks.filter(cond).select("part_key", "chunk_id").distinct()
     # no broadcast hint: the surviving list can be millions of chunks at
     # 100 TB — AQE picks broadcast only when it actually fits
@@ -738,34 +730,9 @@ def _ascii_increment(prefix: str) -> str | None:
     return None
 
 
-def prune_chunks_str(blocks: DataFrame, column: str, eq: str | None = None,
-                     prefix: str | None = None) -> DataFrame:
-    """Zone-map chunk pruning for STRING predicates: keep only the chunks
-    whose [min_str, max_str] can contain ``eq`` / a string starting with
-    ``prefix`` — the metadata-only stage BEFORE
-    :func:`decode_blocks_where`'s encoded-form dictionary evaluation, so
-    at 100 TB a selective string predicate drops whole chunks at the
-    blocks SCAN (the stats are plain parquet columns — the filter
-    reaches row-group statistics) without ever shipping their payload.
-    Stats exist for ASCII values ≤64 chars (``_zone_str``); NULL stats
-    and non-ASCII probes keep the chunk — pruning is always sound, never
-    required. A truncated min is a lower bound by construction, so every
-    comparison below stays conservative."""
-    if (eq is None) == (prefix is None):
-        raise ValueError("pass exactly one of eq= / prefix=")
-    probe = eq if eq is not None else prefix
-    cond = F.col("column") == column
-    if probe.isascii():
-        if eq is not None:
-            cond = cond & ((F.col("min_str") <= F.lit(eq)) | F.col("min_str").isNull()) \
-                        & ((F.col("max_str") >= F.lit(eq)) | F.col("max_str").isNull())
-        elif prefix:
-            hi = _ascii_increment(prefix)
-            cond = cond & ((F.col("max_str") >= F.lit(prefix)) | F.col("max_str").isNull())
-            if hi is not None:
-                cond = cond & ((F.col("min_str") < F.lit(hi)) | F.col("min_str").isNull())
-    surviving = blocks.filter(cond).select("part_key", "chunk_id").distinct()
-    return blocks.join(surviving, ["part_key", "chunk_id"], "left_semi")
+# perfbench/run.py:344 and perfbench/probes.py:188 still call this name;
+# perfbench changes only in a benchmark change, which then drops the alias.
+prune_chunks_str = prune_chunks
 
 
 def prune_chunks_bloom(blocks: DataFrame, column: str, value,
@@ -780,7 +747,10 @@ def prune_chunks_bloom(blocks: DataFrame, column: str, value,
     sidecar (column not in ``EncodeOptions.bloom_cols``) are kept —
     pruning is sound, never required; false positives only keep extra
     chunks, removed by the exact filter after decode. The membership UDF
-    runs over CHUNK-count rows (metadata-sized), never value rows.
+    runs over CHUNK-count rows (metadata-sized), never value rows. It
+    stays apart from :func:`prune_chunks` for that reason: folded in, every
+    zone-map prune would evaluate Python over all block rows, sidecars or
+    not.
 
     ``kind``: 'str' hashes the probe through the string path; any int
     kind ('int64'/'int32'/'ts'/'tsntz', epoch-µs for timestamps) through
@@ -794,6 +764,4 @@ def prune_chunks_bloom(blocks: DataFrame, column: str, value,
         from varint_spark import bloom as bm
         return b.apply(lambda s: s is None or bm.might_contain(s, h))
 
-    cond = (F.col("column") == column) & _might(F.col("bloom"))
-    surviving = blocks.filter(cond).select("part_key", "chunk_id").distinct()
-    return blocks.join(surviving, ["part_key", "chunk_id"], "left_semi")
+    return _keep_chunks(blocks, (F.col("column") == column) & _might(F.col("bloom")))

@@ -462,7 +462,7 @@ def delete_where_checkpointed(spark: SparkSession, root: str,
     absent stats keep the chunk) — so at 100 TB a selective delete never
     ships non-intersecting chunks' predicate blocks off disk."""
     from .deletes import delete_where as _dw
-    from .engine import prune_chunks, prune_chunks_bloom, prune_chunks_str
+    from .engine import prune_chunks, prune_chunks_bloom
 
     commit = next_commit(root)
     targets = _stores(root)
@@ -471,14 +471,11 @@ def delete_where_checkpointed(spark: SparkSession, root: str,
     rows = 0
     for t in targets:
         blocks = read_blocks(spark, t).drop("pk")
-        if (lo is not None or hi is not None) and kind != "str":
-            blocks = prune_chunks(blocks, filter_col, lo=lo, hi=hi)
-        elif kind == "str" and (eq is not None or prefix is not None):
-            blocks = prune_chunks_str(blocks, filter_col, eq=eq,
-                                      prefix=prefix)
-            if eq is not None:  # no-sidecar chunks are kept, always sound
-                blocks = prune_chunks_bloom(blocks, filter_col, eq,
-                                            kind="str")
+        if any(v is not None for v in (lo, hi, eq, prefix)):
+            blocks = prune_chunks(blocks, filter_col, lo=lo, hi=hi, eq=eq,
+                                  prefix=prefix)
+        if kind == "str" and eq is not None:  # no-sidecar chunks are kept
+            blocks = prune_chunks_bloom(blocks, filter_col, eq, kind="str")
         dv = _dw(blocks, filter_col, kind=kind, lo=lo, hi=hi, eq=eq,
                  prefix=prefix, isin=isin, like=like, shared=shared)
         rows += delete_checkpointed(dv, t, commit=commit,

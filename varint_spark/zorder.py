@@ -4,7 +4,7 @@ Zone maps prune on the column the data is ORDERED by; a second
 predicate column sees near-full-range chunks and prunes nothing.
 Interleaving the bits of both columns' normalized ranks (the Morton
 curve) makes chunks locally narrow in EVERY interleaved dimension at
-once, so `prune_chunks` works for each of them — the same reason
+once, so `prune_chunks(lo=, hi=)` works for each of them — the same reason
 Delta/Iceberg expose Z-ORDER clustering for multi-dim workloads.
 
 Everything is JVM-side Catalyst expressions (shift/mask/sum unrolled
