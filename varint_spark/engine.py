@@ -23,8 +23,8 @@ idle cores and the straggler tail reads as false scaling inefficiency
 (N→4N kernel efficiency 0.64 at 16 buckets/4 cores vs 0.99 at 128);
 8×+ gives enough balanced waves that the tail amortizes. Block rows are
 a few MB each (chunk_rows × ~bytes/turn ÷ ratio), so shuffle partitions
-stay bounded; the only driver-side data is the lineage summary (one row
-per partition).
+stay bounded; the only driver-side data is the lineage summary (one
+lineage row per (partition, column)).
 """
 
 from __future__ import annotations
@@ -297,15 +297,12 @@ def _resolve_shared(shared, kinds: dict[str, str]) -> dict | None:
     return out or None
 
 
-def make_encode_udf(kinds: dict[str, str], chunk_rows: int, group_col: str,
-                    order_col: str, shared=None, f64_precision: str | None = None,
-                    f32_precision: str | None = None,
-                    bloom_cols: tuple = (), bloom_bits: int = 10,
-                    hll_cols: tuple = (), hll_p: int = 12):
+def make_encode_udf(kinds: dict[str, str], opts: EncodeOptions, shared=None):
     """Grouped-map Arrow UDF: one (bucket, salt) group of rows -> block
     rows. Arrow-native end to end — rows never materialize as Python
     objects (the applyInPandas equivalent spends most of its time building
     millions of Python strings)."""
+    group_col, order_col, chunk_rows = opts.group_col, opts.order_col, opts.chunk_rows
 
     def encode_group(key, table):
         bucket, salt = int(key[0].as_py()), int(key[1].as_py())
@@ -322,9 +319,9 @@ def make_encode_udf(kinds: dict[str, str], chunk_rows: int, group_col: str,
             segments = _run_lengths(chunk_cols[group_col]) if group_col in chunk_cols else None
             out.extend(_encode_chunk_rows(chunk_cols, m, part_key, chunk_id, kinds,
                                           shared_cols, segments, fsst_cache,
-                                          f64_precision, f32_precision,
-                                          bloom_cols, bloom_bits,
-                                          hll_cols, hll_p))
+                                          opts.f64_precision, opts.f32_precision,
+                                          opts.bloom_cols, opts.bloom_bits,
+                                          opts.hll_cols, opts.hll_p))
         return pa.Table.from_pylist(out, schema=_BLOCK_PA_SCHEMA)
 
     return encode_group
@@ -360,13 +357,9 @@ def encode_transcripts(df: DataFrame, opts: EncodeOptions = EncodeOptions(),
     """Table rows -> encoded block rows (one per chunk × column).
 
     ``shared``: optional Broadcast[SharedTables] (see varint_spark.shared)."""
-    kinds = kinds or kinds_for_schema(df.schema)
-    keyed = with_partition_keys(df, opts)
-    fn = make_encode_udf(kinds, opts.chunk_rows, opts.group_col, opts.order_col,
-                         shared, opts.f64_precision, opts.f32_precision,
-                         opts.bloom_cols, opts.bloom_bits,
-                         opts.hll_cols, opts.hll_p)
-    return keyed.groupBy("_bucket", "_salt").applyInArrow(fn, BLOCK_SCHEMA_DDL)
+    fn = make_encode_udf(kinds or kinds_for_schema(df.schema), opts, shared)
+    return with_partition_keys(df, opts).groupBy("_bucket", "_salt") \
+        .applyInArrow(fn, BLOCK_SCHEMA_DDL)
 
 
 def _decoded_to_output(arr: pa.Array, kind: str) -> pa.Array:
@@ -652,21 +645,48 @@ def roundtrip(df: DataFrame, group_col: str, order_col: str,
     return decode_blocks(blocks, ddl, kinds=kinds)
 
 
+LINEAGE_SCHEMA_DDL = (
+    "part_key string, column string, codec string, n_chunks long, "
+    "values long, raw_bytes long, encoded_bytes long, varint_bytes long, "
+    "digest string"
+)
+
+_LINEAGE_PA_SCHEMA = pa.schema([
+    ("part_key", pa.string()), ("column", pa.string()), ("codec", pa.string()),
+    ("n_chunks", pa.int64()), ("values", pa.int64()), ("raw_bytes", pa.int64()),
+    ("encoded_bytes", pa.int64()), ("varint_bytes", pa.int64()),
+    ("digest", pa.string()),
+])
+
+_SUMMED = ("count", "raw_bytes", "encoded_bytes", "varint_bytes")
+
+
+def lineage_rows(blocks: pa.Table) -> pa.Table:
+    """The lineage rule, on block rows (only their metadata columns are
+    read): one row per (part_key, column) with the sorted set of codecs
+    chosen, the chunk count, the value and byte sums, and the sha256 of
+    the sorted chunk digests."""
+    g = blocks.group_by(["part_key", "column"], use_threads=False).aggregate(
+        [("codec", "distinct"), ("chunk_id", "count", pa.compute.CountOptions("all")),
+         ("digest", "list")] + [(c, "sum") for c in _SUMMED]
+    ).sort_by([("part_key", "ascending"), ("column", "ascending")])
+    return pa.table({
+        "part_key": g["part_key"], "column": g["column"],
+        "codec": [",".join(sorted(c)) for c in g["codec_distinct"].to_pylist()],
+        "n_chunks": g["chunk_id_count"], "values": g["count_sum"],
+        **{c: g[f"{c}_sum"] for c in _SUMMED[1:]},
+        "digest": [hashlib.sha256("".join(sorted(d)).encode()).hexdigest()
+                   for d in g["digest_list"].to_pylist()],
+    }, schema=_LINEAGE_PA_SCHEMA)
+
+
 def lineage_summary(blocks: DataFrame) -> DataFrame:
     """Per-partition lineage/metrics rows (the engine's ``varintFORMeta``
-    analog — SURVEY §1.1): one row per (part_key, column)."""
-    return (
-        blocks.groupBy("part_key", "column")
-        .agg(
-            F.array_join(F.sort_array(F.collect_set("codec")), ",").alias("codec"),
-            F.count("*").alias("n_chunks"),
-            F.sum("count").alias("values"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("encoded_bytes").alias("encoded_bytes"),
-            F.sum("varint_bytes").alias("varint_bytes"),
-            F.sha2(F.concat_ws("", F.sort_array(F.collect_list("digest"))), 256).alias("digest"),
-        )
-    )
+    analog — SURVEY §1.1): :func:`lineage_rows` over each partition's
+    metadata columns, one row per (part_key, column)."""
+    meta = ["part_key", "chunk_id", "column", "codec", "digest", *_SUMMED]
+    return blocks.select(*meta).groupBy("part_key").applyInArrow(
+        lambda _, t: lineage_rows(t), LINEAGE_SCHEMA_DDL)
 
 
 def prune_chunks(blocks: DataFrame, column: str, lo=None, hi=None,

@@ -19,40 +19,58 @@ Resume, snapshots, ``vacuum`` and ``next_commit`` read these small files
 on the driver, with no Spark job. A store without manifests has no
 committed data and reads as empty.
 
-Protocol:
+Executors write the block files themselves, and the driver writes the
+lineage and manifests with ``pathlib``, so ``<root>`` must be a path
+every executor and the driver can write (a shared filesystem mount).
 
-1. Pending work = distinct (bucket, salt) keys of the input **anti-joined**
-   against the part_keys the manifests list (a broadcast local relation).
-2. Blocks are written with *dynamic partition overwrite*, so re-encoding a
-   partition after a crash replaces its directory instead of duplicating
-   rows (idempotent because block contents are deterministic —
-   tests/test_engine_e2e.py::test_determinism_across_parallelism).
-3. The lineage rows, collected once from this run's cached blocks, are
-   written from the driver after the block write commits, and the
-   manifest listing their part_keys last. A crash before the manifest
-   leaves block dirs and lineage rows that readers ignore; the next run
-   re-encodes those partitions under a fresh id, and ``vacuum`` reclaims
-   dirs no run re-covers.
+Protocol (one Spark job per encode):
+
+1. Pending work = the input rows whose (bucket, salt) key is
+   **anti-joined** against the part_keys the manifests list (a broadcast
+   local relation).
+2. Each (bucket, salt) group is encoded and written by the task that
+   holds it: pyarrow writes the group's block rows under a hidden name
+   unique to the attempt in ``blocks/pk=<k>/``, renames it to
+   ``part-0.parquet`` and deletes every other visible file there. A
+   re-encode after a crash therefore replaces the partition instead of
+   duplicating rows (idempotent because block contents are deterministic
+   — tests/test_engine_e2e.py::test_determinism_across_parallelism). The
+   task returns the group's lineage rows (``engine.lineage_rows``).
+3. The driver collects those rows, writes them under
+   ``lineage/commit=<id>/``, and writes the manifest listing their
+   part_keys last. A crash before the manifest leaves block dirs and
+   lineage rows that readers ignore; the next run re-encodes those
+   partitions under a fresh id, and ``vacuum`` reclaims dirs no run
+   re-covers.
 """
 
 from __future__ import annotations
 
 import functools
+import uuid
 from pathlib import Path
+from urllib.parse import quote, unquote
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine import EncodeOptions, encode_transcripts, lineage_summary, with_partition_keys
+from .engine import (LINEAGE_SCHEMA_DDL, EncodeOptions, kinds_for_schema,
+                     lineage_rows, make_encode_udf, with_partition_keys)
 
 
-def _part_key_col() -> F.Column:
-    # Must match the engine UDF's Python f"{bucket:06d}:{salt:04d}" exactly:
-    # printf %d semantics widen (never truncate) for >=5-digit or negative
-    # salts, where lpad would truncate '12345' -> '1234' and collide keys.
-    return F.format_string("%06d:%04d", F.col("_bucket"), F.col("_salt"))
+# A part_key ("<bucket>:<salt>", digits and "-" around one ":") names its
+# block directory the way Spark names a partition directory: URI-escaped,
+# so ":" is "%3A" on disk, and Spark's partition discovery reads it back
+# as the logical key.
+
+def _part_key_dir(part_key: str) -> str:
+    return "pk=" + quote(part_key, safe="")
+
+
+def _dir_part_key(name: str) -> str:
+    return unquote(name.split("=", 1)[1])
 
 
 def _read_log(spark: SparkSession, path: Path) -> DataFrame | None:
@@ -99,11 +117,12 @@ def _committed_keys(root: str, as_of: int | None = None) -> list[str]:
                    for k in (p / str(c)).read_text().split()})
 
 
-def _publish(path: Path, write) -> None:
+def _publish(path: Path, write, tag: str = "") -> None:
     """``write`` a hidden sibling of ``path`` (readers skip dot-files),
-    then rename it into place: readers see the whole file or nothing."""
+    then rename it into place: readers see the whole file or nothing.
+    ``tag`` suffixes the hidden name, for writers that may race."""
     path.parent.mkdir(parents=True, exist_ok=True)
-    tmp = path.with_name("." + path.name)
+    tmp = path.with_name(f".{path.name}{tag}")
     write(tmp)
     tmp.replace(path)
 
@@ -113,11 +132,9 @@ def _write_manifest(root: str, commit: int, part_keys=()) -> None:
              lambda t: t.write_text("".join(f"{k}\n" for k in sorted(part_keys))))
 
 
-def _key_relation(spark: SparkSession, keys: list[str],
-                  name: str = "part_key") -> DataFrame:
+def _key_relation(spark: SparkSession, keys: pa.Table) -> DataFrame:
     """``keys`` as a broadcast local relation: joining it launches no job."""
-    return F.broadcast(spark.createDataFrame(
-        pa.table({name: pa.array(keys, pa.string())})))
+    return F.broadcast(spark.createDataFrame(keys))
 
 
 def _gate_commits(df: DataFrame, allowed: set[int]) -> DataFrame:
@@ -166,42 +183,45 @@ def encode_checkpointed(df: DataFrame, root: str,
     salt groups); align batch boundaries to ``salt_span`` to keep a batch
     from straddling a committed salt group."""
     spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    encode_group = make_encode_udf(kinds or kinds_for_schema(df.schema), opts,
+                                   shared)
+    blocks_dir = Path(root) / "blocks"
 
-    keyed = with_partition_keys(df, opts).withColumn("_part_key", _part_key_col())
+    def write_group(key, table):
+        # protocol step 2: this task holds the whole partition, so it writes
+        # the partition's block file and derives its lineage rows
+        blocks = encode_group(key, table)
+        part_dir = blocks_dir / _part_key_dir(blocks["part_key"][0].as_py())
+        # min/max of a payload column prunes nothing, and pyarrow would
+        # store it in every page header as well as in the footer
+        stats = [c for c in blocks.column_names if c not in ("bloom", "hll", "block")]
+        _publish(part_dir / "part-0.parquet",
+                 lambda t: pq.write_table(blocks, t, write_statistics=stats),
+                 tag=f".{uuid.uuid4().hex}")
+        for f in part_dir.iterdir():
+            if f.name != "part-0.parquet" and not f.name.startswith((".", "_")):
+                f.unlink()
+        return lineage_rows(blocks)
+
+    keyed = with_partition_keys(df, opts)
     # resume skips only MANIFESTED part_keys: a crash before the manifest
     # leaves lineage rows that readers ignore — those partitions must
     # re-encode, not be skipped into invisibility
     done = _committed_keys(root)
     if done:
-        keyed = keyed.join(_key_relation(spark, done, "_part_key"),
-                           on="_part_key", how="left_anti")
-    pending = keyed.drop("_part_key", "_bucket", "_salt")
-    blocks = encode_transcripts(pending, opts, kinds=kinds, shared=shared).cache()
-    try:
-        blocks_dir = str(Path(root) / "blocks")
-        (
-            blocks.withColumn("pk", F.col("part_key"))
-            .write.mode("overwrite")
-            .partitionBy("pk")
-            .parquet(blocks_dir)
-        )
-        # commit lineage only after the block write succeeded. The summary
-        # comes from THIS RUN's cached block rows, not a read-back of the
-        # whole store: the r6 read-back + anti-join re-scanned every file
-        # ever committed on each commit (O(store) per commit at scale) and
-        # could resurrect orphan partitions of a crashed run that the
-        # current input no longer covers. Cached bytes == written bytes by
-        # the block-determinism invariant, so the lineage is exact.
-        commit = next_commit(root)
-        rows = lineage_summary(blocks).toArrow()
-        if rows.num_rows:
-            _publish(Path(root) / "lineage" / f"commit={commit}" / "part-0.parquet",
-                     lambda t: pq.write_table(rows, t))
-        keys = set(rows["part_key"].to_pylist())
-        _write_manifest(root, commit, keys)
-    finally:
-        blocks.unpersist()
+        bucket, salt = zip(*(map(int, k.split(":")) for k in done))
+        keyed = keyed.join(_key_relation(spark, pa.table({
+            "_bucket": pa.array(bucket, pa.int32()),
+            "_salt": pa.array(salt, pa.int32())})),
+            on=["_bucket", "_salt"], how="left_anti")
+    rows = keyed.groupBy("_bucket", "_salt") \
+        .applyInArrow(write_group, LINEAGE_SCHEMA_DDL).toArrow()
+    commit = next_commit(root)
+    if rows.num_rows:
+        _publish(Path(root) / "lineage" / f"commit={commit}" / "part-0.parquet",
+                 lambda t: pq.write_table(rows, t))
+    keys = set(rows["part_key"].to_pylist())
+    _write_manifest(root, commit, keys)
     return {"partitions_encoded": len(keys), "partitions_skipped": len(done),
             "commit": commit}
 
@@ -211,8 +231,8 @@ def vacuum(spark: SparkSession, root: str, dry_run: bool = False,
     """Garbage-collect block partition directories that no committed
     lineage row references — the debris a crash before the commit marker
     leaves behind (protocol step 3 above). Normally the next run's
-    dynamic-partition overwrite replaces them, but a pipeline that never
-    re-runs (or re-runs with a narrower input) keeps paying their
+    encode of the same partition replaces its file, but a pipeline that
+    never re-runs (or re-runs with a narrower input) keeps paying their
     storage forever; ``vacuum`` is the explicit reclaim, the
     same contract as Delta/Iceberg VACUUM: only UNREFERENCED partition
     dirs are touched, so readers of committed data are never affected.
@@ -229,11 +249,8 @@ def vacuum(spark: SparkSession, root: str, dry_run: bool = False,
     Returns ``{"orphans": [...], "removed": n, "orphan_overlays": [...]}``;
     ``dry_run`` lists without deleting."""
     import shutil
-    from urllib.parse import unquote
 
-    # Spark escapes partition values URI-style on disk (":" -> "%3A");
-    # lineage part_keys are the logical form — unquote before comparing
-    on_disk = {unquote(p.name.split("=", 1)[1]): p
+    on_disk = {_dir_part_key(p.name): p
                for p in (Path(root) / "blocks").glob("pk=*") if p.is_dir()}
     committed = set(_committed_keys(root))
     orphans = sorted(k for k in on_disk if k not in committed)
@@ -262,7 +279,7 @@ def vacuum(spark: SparkSession, root: str, dry_run: bool = False,
 # (delete-log rows under `commit=<id>`). A snapshot at version v is therefore
 # exact for append+delete histories: the partitions manifested by commits
 # <= v, minus the deletion vectors whose commit is <= v. Re-encoding an
-# EXISTING part_key (dynamic overwrite) physically replaces its bytes, so
+# EXISTING part_key (a new part-0.parquet) physically replaces its bytes, so
 # history before the overwrite is not reconstructable for that partition —
 # the documented Iceberg-without-Iceberg limit of this plain-parquet layout.
 
@@ -344,9 +361,9 @@ def _read_snapshot_single(spark: SparkSession, root: str, schema_ddl: str,
     # by the union of the two
     from .engine import decode_blocks
 
+    keys = pa.table({"part_key": pa.array(_committed_keys(root, as_of), pa.string())})
     blocks = read_blocks(spark, root).drop("pk").join(
-        _key_relation(spark, _committed_keys(root, as_of)),
-        on="part_key", how="left_semi")
+        _key_relation(spark, keys), on="part_key", how="left_semi")
     dv = read_deletes(spark, root, as_of=as_of,
                       allowed=committed_ids(root) | dv_allowed)
     return decode_blocks(blocks, schema_ddl, kinds=kinds, shared=shared,
